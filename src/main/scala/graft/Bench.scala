@@ -46,6 +46,10 @@ object Bench {
   private val MinRetryWindowSec = 120.0
   private val MaxRunsPerQuery = 4
   private val RetryThresholdSec = 1.5 // below this a run can't hide a stall
+  // One `bench_details.json` entry's key and min (seconds, or null when the
+  // query never succeeded): the prior-mins reader and the writer's
+  // self-check parse with this same line regex. Keys are any query name.
+  private val DetailsMin = """"([^"]+)":\s*\{"min":\s*(null|[0-9.]+)""".r
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -124,14 +128,15 @@ object Bench {
     // alone left mid-tier 1.5-5 s drifters with 2 samples (VERDICT r12
     // "what's wrong" #2). Parsed with a line regex (the file is our own
     // writer's fixed shape); absent/unreadable prior ⇒ empty map and the
-    // absolute rule alone, the pre-r13 behavior.
+    // absolute rule alone, the pre-r13 behavior. A query with no
+    // successful run carries `"min": null` — no prior, skipped.
     val priorMins: Map[String, Double] = {
       val path = sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR",
         "/root/repo/bench_prior.json")
-      val re = """"(q[^"]+)":\s*\{"min":\s*([0-9.]+)""".r
       try {
         val src = scala.io.Source.fromFile(path, "UTF-8")
-        try re.findAllMatchIn(src.mkString)
+        try DetailsMin.findAllMatchIn(src.mkString)
+          .filter(_.group(2) != "null")
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
         finally src.close()
       } catch {
@@ -267,11 +272,12 @@ object Bench {
     // bench_details.json — FROZEN schema (VERDICT r14 #2: round-over-round
     // per-query accountability rests on this file, so its shape is a
     // contract): one top-level JSON object, one key per query (full query
-    // name), each value exactly {"min": <sec, 2dp>, "runs": [<sec, 2dp>,
-    // ...] (chronological, successful runs only), "attempts": <int, incl.
-    // failures>}. Written ATOMICALLY (temp file + rename in the same
-    // directory) so a reader — the driver's comparator, or next round's
-    // prior-mins retry targeting — can never observe a torn file, then
+    // name), each value exactly {"min": <sec, 2dp, or null when no run
+    // succeeded>, "runs": [<sec, 2dp>, ...] (chronological, successful runs
+    // only), "attempts": <int, incl. failures>}. Written ATOMICALLY (temp
+    // file + rename in the same directory) so a reader — a per-query
+    // comparator, or next round's prior-mins retry targeting — can never
+    // observe a torn file, then
     // re-parsed as a self-check with the same regex the prior-mins reader
     // uses: an emit bug fails loudly here, not silently next round.
     val detailsPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAILS",
@@ -279,7 +285,7 @@ object Bench {
     val detailsJson = {
       val rows = queries.map { case (name, _) =>
         val ts = runs.getOrElse(name, Nil).reverse
-        s"""  "$name": {"min": ${r3(ts.minOption.getOrElse(9999.0))}, """ +
+        s"""  "$name": {"min": ${ts.minOption.map(r3).getOrElse("null")}, """ +
           s""""runs": [${ts.map(r3).mkString(", ")}], """ +
           s""""attempts": ${attempts.getOrElse(name, 0)}}"""
       }
@@ -291,16 +297,19 @@ object Bench {
         dest.toAbsolutePath.getParent, ".bench_details", ".tmp")
       java.nio.file.Files.write(tmp,
         (detailsJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      // createTempFile makes the file 0600; the move would carry that mode
+      // over the world-readable file it replaces
+      java.nio.file.Files.setPosixFilePermissions(tmp,
+        java.nio.file.attribute.PosixFilePermissions.fromString("rw-r--r--"))
       java.nio.file.Files.move(tmp, dest,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       // self-check: the emitted file must round-trip through the exact
-      // parser consumers use (the prior-mins line regex at the top of this
-      // main) with one min per query
-      val re = """"(q[^"]+)":\s*\{"min":\s*([0-9.]+)""".r
+      // parser consumers use (DetailsMin, the prior-mins reader's regex)
+      // with one min per query
       val back = new String(java.nio.file.Files.readAllBytes(dest),
         java.nio.charset.StandardCharsets.UTF_8)
-      val parsed = re.findAllMatchIn(back).map(_.group(1)).toSet
+      val parsed = DetailsMin.findAllMatchIn(back).map(_.group(1)).toSet
       if (parsed != queries.map(_._1).toSet)
         System.err.println(s"[bench] SELF-CHECK FAILED: $detailsPath " +
           s"re-parses to ${parsed.size} queries, expected ${queries.size}")

@@ -854,17 +854,11 @@ object SparkEntry {
     // A6 — describe() over nearest distances.
     ("q17_distance_describe",
       (s: SparkSession, dir: String) => {
-        val d = col("distance_to_nearest_neighbor")
-        Summary.nearestDistances(bandedTopK(s, dir, 1), Cohorts.spec)
-          .agg(count(lit(1)).as("count"), rnd(avg(d), 4).as("mean"),
-            rnd(stddev_samp(d), 4).as("std"), rnd(min(d), 4).as("min"),
-            rnd(expr("percentile(distance_to_nearest_neighbor, 0.25)"), 4).as("p25"),
-            rnd(expr("percentile(distance_to_nearest_neighbor, 0.5)"), 4).as("p50"),
-            rnd(expr("percentile(distance_to_nearest_neighbor, 0.75)"), 4).as("p75"),
-            rnd(expr("percentile(distance_to_nearest_neighbor, 0.9)"), 4).as("p90"),
-            rnd(expr("percentile(distance_to_nearest_neighbor, 0.95)"), 4).as("p95"),
-            rnd(expr("percentile(distance_to_nearest_neighbor, 0.99)"), 4).as("p99"),
-            rnd(max(d), 4).as("max"))
+        // one describe() row over all months: a cohort-free spec
+        val stats = Summary.nearestDistanceStats(
+          Summary.nearestDistances(bandedTopK(s, dir, 1), Cohorts.spec),
+          Cohorts.spec.copy(cohortCols = Nil))
+        stats.select(col("count") +: stats.columns.toSeq.tail.map(c => rnd(col(c), 4).as(c)): _*)
       },
       Some(s"""${OracleCtes.prefix},
               |nearest AS (SELECT month, nc_idx, min(dist) AS d
@@ -1011,7 +1005,7 @@ object SparkEntry {
     ("q39_knn_proportional_k",
       (s: SparkSession, dir: String) => {
         val (c, nc) = cohortPair(s, dir)
-        NeighborJoin.topKBandedProportional(c, nc, Cohorts.spec, 0.1)
+        NeighborJoin.topKBanded(c, nc, Cohorts.spec, 0.1)
           .groupBy("month", "nc_idx")
           .agg(count(lit(1)).as("n_neighbors"))
       },

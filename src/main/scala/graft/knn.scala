@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Shape of a prepared cohort fed to the neighbor join: both sides must
   * share it (the reference hard-checks identical feature columns,
@@ -24,27 +25,38 @@ final case class CohortSpec(
 
 /** The kNN / radius similarity join (reference:
   * cocoa/nearest_consented_customers.py:145-264 — sklearn brute-force over
-  * a CSR matrix, single machine). Spark-native design:
+  * a CSR matrix, single machine). Spark-native design in two layers.
   *
-  *  1. [[pairs]] — the candidate-pairs relation `(cohort…, nc_idx, nc_value,
-  *     c_idx, c_value, dist)`. Within-cohort matching is an equi-join on the
-  *     cohort keys (shuffle-partitioned both sides → co-located cross
-  *     product per cohort, never a global cross join). With no cohort keys
-  *     the consent side is broadcast (small-dim case). Distance is a
-  *     codegen'd column expression — no UDF.
-  *  2. [[topK]] — exact k smallest per noconsent row via window row_number,
-  *     ties broken by c_idx (sklearn ties are index-ordered; SURVEY §7.4.1).
-  *  3. [[graft.TopKAgg.topK]] — same result through a typed bounded-heap
-  *     Aggregator: one partial-aggregate pass, no per-group full sort /
-  *     no shuffle of all pairs; equivalence is pinned by CocoaInvariantsSpec.
-  *  4. [[withinRadius]] — the theta variant (dist <= r).
+  * Dense references — the brute |NC|×|C| relation and its refinements;
+  * every pruned path is pinned against them and falls back to them:
+  *  - [[pairs]] — the candidate-pairs relation `(cohort…, nc_idx,
+  *    nc_value, c_idx, c_value, dist)`. Within-cohort matching is an
+  *    equi-join on the cohort keys (never a global cross join); with no
+  *    cohort keys the consent side is broadcast. Distance is a codegen'd
+  *    column expression — no UDF.
+  *  - [[topK]] — exact k smallest per noconsent row via window row_number,
+  *    ties broken by c_idx (sklearn ties are index-ordered; SURVEY §7.4.1);
+  *    fixed or proportional k.
+  *  - [[withinRadius]] / [[withinRadiusPerCohort]] — the theta variant
+  *    (dist <= r) with a constant or a per-cohort broadcast radius.
   *
-  * Scale paths beyond the brute pairs relation: [[topKBanded]] /
-  * [[topKBandedProportional]] (exact, per-probe adaptive radius from the
-  * 1-D k-NN distance), [[withinRadiusBucketed]] /
-  * [[withinRadiusBucketedPerCohort]] (numeric band prune) and
-  * [[withinRadiusLsh]] (MinHash-banded token prune) — each equivalence- or
-  * oracle-pinned against its dense twin.
+  * Planned joins — they take the two cohorts, and this object is the ONLY
+  * place that checks the metric's capabilities and the feature count to
+  * pick the pruned path or the dense fallback:
+  *  - [[topKBanded]] — exact top-k, fixed or proportional k
+  *    ([[MatchStrategy.K]]'s convention). One numeric feature under a
+  *    band-bounded metric: 1-D k-NN rank window → adaptive radius →
+  *    two-tier bucket band join; cosine: the quadratic x-interval prune;
+  *    hamming with ≤ 1 numeric: the drop-one-token subset join; anything
+  *    else: `topK(pairs)`.
+  *  - [[withinRadiusBucketed]] / [[withinRadiusBucketedPerCohort]] —
+  *    constant or per-cohort radius through the 3-bucket band join on the
+  *    first numeric feature (cosine: the interval prune); dense otherwise.
+  *  - [[withinRadiusLsh]] — MinHash-banded token prune.
+  *
+  * Each pruned path is equivalence- or oracle-pinned against its dense twin
+  * (PropertySpec, CocoaInvariantsSpec; q58, q39, q61, q70 share the dense
+  * oracles).
   */
 object NeighborJoin {
 
@@ -71,9 +83,7 @@ object NeighborJoin {
         // only the (tiny) pre-join size and coalesces back to one partition,
         // serializing the whole pair expansion onto one core.
         val n = nc0.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-        val nc = nc0.repartition(n, col("nc_idx"))
-        if (spec.cohortCols.nonEmpty) nc.join(broadcast(c0), spec.cohortCols)
-        else nc.crossJoin(broadcast(c0))
+        joinCoh(nc0.repartition(n, col("nc_idx")), c0, spec.cohortCols)
       } else if (salt > 1) {
         val ncS = nc0.withColumn("__salt", pmod(col("nc_idx"), lit(salt)).cast("int"))
         val cS = c0.withColumn("__salt", explode(array((0 until salt).map(lit(_)): _*)))
@@ -82,11 +92,7 @@ object NeighborJoin {
         if (spec.cohortCols.nonEmpty) nc0.join(c0, spec.cohortCols)
         else nc0.crossJoin(c0)
       }
-    val numPairs = spec.numCols.map(n => (col(s"nc_$n"), col(s"c_$n")))
-    joined
-      .withColumn("dist", spec.metric.dist(col("nc_features"), col("c_features"), numPairs))
-      .drop((Seq("nc_features", "c_features") ++
-        spec.numCols.flatMap(n => Seq(s"nc_$n", s"c_$n"))): _*)
+    joined.withColumn("dist", distCol(spec)).drop(featureCols(spec): _*)
   }
 
   private def prefixed(df: DataFrame, spec: CohortSpec, p: String): DataFrame = {
@@ -99,35 +105,73 @@ object NeighborJoin {
     df.select(cols: _*)
   }
 
+  /** Exact distance between the prefixed nc_/c_ feature columns. */
+  private def distCol(spec: CohortSpec): Column =
+    spec.metric.dist(col("nc_features"), col("c_features"),
+      spec.numCols.map(n => (col(s"nc_$n"), col(s"c_$n"))))
+
+  /** The prefixed feature columns a pair relation drops once it has `dist`. */
+  private def featureCols(spec: CohortSpec): Seq[String] =
+    Seq("nc_features", "c_features") ++ spec.numCols.flatMap(n => Seq(s"nc_$n", s"c_$n"))
+
+  /** The pairs-relation schema `(cohort…, nc_idx, nc_value, c_idx, c_value,
+    * dist)`. */
+  private def pairCols(coh: Seq[String]): Seq[Column] =
+    coh.map(col(_)) ++ Seq(col("nc_idx"), col("nc_value"), col("c_idx"),
+      col("c_value"), col("dist"))
+
+  /** Broadcast-join a dimension-sized per-cohort frame (a cross join when
+    * the spec has no cohort scope — both frames are then global). */
+  private def joinCoh(df: DataFrame, small: DataFrame, coh: Seq[String]): DataFrame =
+    if (coh.nonEmpty) df.join(broadcast(small), coh)
+    else df.crossJoin(broadcast(small))
+
   /** Resolve the reference's proportional-k: `k < 1` means
     * `int(k * |consent|)` (cocoa/nearest_consented_customers.py:145-147).
     * Cohort-scoped when cohort keys are present. Returns a per-cohort k
     * DataFrame (`cohort…, __k`) or a constant. */
-  def resolveK(consent: DataFrame, spec: CohortSpec, k: Double): Either[Int, DataFrame] =
+  private def resolveK(consent: DataFrame, spec: CohortSpec,
+                       k: Double): Either[Int, DataFrame] =
     if (k >= 1) Left(k.toInt)
     else Right(
       consent.groupBy(spec.cohortCols.map(col(_)): _*)
         .agg(floor(lit(k) * count(lit(1))).cast("int").as("__k")))
 
-  /** Exact top-k per noconsent row: window row_number over (dist, c_idx). */
+  /** Per-probe k as the `__kk` column: a fixed k stays a folded literal; a
+    * proportional k joins its per-cohort resolution (dimension-sized →
+    * broadcast). A cohort resolving to k = 0 keeps no row. */
+  private def withK(df: DataFrame, consent: DataFrame, spec: CohortSpec,
+                    k: Double): DataFrame = resolveK(consent, spec, k) match {
+    case Left(kk) => df.withColumn("__kk", lit(kk.toLong))
+    case Right(perCohort) => joinCoh(df, perCohort.select(spec.cohortCols.map(col(_)) :+
+      col("__k").cast("long").as("__kk"): _*), spec.cohortCols)
+  }
+
+  /** Per-probe ranking order: (dist, c_idx). */
+  private def nearestFirst(coh: Seq[String]) =
+    Window.partitionBy((coh :+ "nc_idx").map(col(_)): _*)
+      .orderBy(col("dist").asc, col("c_idx").asc)
+
+  /** The exact (dist, c_idx) rank over each probe's candidate superset, cut
+    * at its `__kk` — the last step of every pruned top-k. Each probe is
+    * ranked over ONE sound superset of its true top-k, so the rows equal
+    * [[topK]] on the dense relation. */
+  private def rankWithinK(cand: DataFrame, coh: Seq[String]): DataFrame =
+    cand.withColumn("rank", row_number().over(nearestFirst(coh)))
+      .filter(col("rank") <= col("__kk"))
+      .select(pairCols(coh) :+ col("rank"): _*)
+
+  /** Exact top-k per noconsent row: window row_number over (dist, c_idx).
+    * A fixed k keeps the literal rank filter, which Spark turns into a
+    * per-partition WindowGroupLimit below the sort. */
   def topK(pairs: DataFrame, spec: CohortSpec, k: Double,
            consentForProportional: Option[DataFrame] = None): DataFrame = {
-    val w = Window
-      .partitionBy((spec.cohortCols :+ "nc_idx").map(col(_)): _*)
-      .orderBy(col("dist").asc, col("c_idx").asc)
-    val ranked = pairs.withColumn("rank", row_number().over(w))
+    val ranked = pairs.withColumn("rank", row_number().over(nearestFirst(spec.cohortCols)))
     if (k >= 1) ranked.filter(col("rank") <= k.toInt)
-    else {
-      val perCohort = resolveK(
-        consentForProportional.getOrElse(
-          throw new IllegalArgumentException(
-            "proportional k requires the consent cohort")), spec, k)
-        .toOption.get
-      val joined =
-        if (spec.cohortCols.nonEmpty) ranked.join(broadcast(perCohort), spec.cohortCols)
-        else ranked.crossJoin(broadcast(perCohort))
-      joined.filter(col("rank") <= col("__k")).drop("__k")
-    }
+    else withK(ranked, consentForProportional.getOrElse(
+        throw new IllegalArgumentException("proportional k requires the consent cohort")),
+        spec, k)
+      .filter(col("rank") <= col("__kk")).drop("__kk")
   }
 
   /** Radius (theta) refinement; unmatched rows recovered by the caller with
@@ -135,6 +179,14 @@ object NeighborJoin {
     * cocoa/nearest_consented_customers.py:176-182,362-364). */
   def withinRadius(pairs: DataFrame, radius: Double): DataFrame =
     pairs.filter(col("dist") <= radius)
+
+  /** Cohort-scoped radius refinement: `radii` is (cohort…, __radius) — one
+    * row per cohort, so it broadcasts; the filter happens map-side on the
+    * pairs relation with no extra shuffle. */
+  def withinRadiusPerCohort(pairs: DataFrame, radii: DataFrame,
+                            cohortCols: Seq[String]): DataFrame =
+    joinCoh(pairs, radii, cohortCols)
+      .filter(col("dist") <= col("__radius")).drop("__radius")
 
   /** Exact radius join via numeric band pruning. Both supported metrics
     * bound the distance below by the first numeric feature's gap
@@ -149,39 +201,72 @@ object NeighborJoin {
     * near-linear when r is small against the feature's spread, and a plain
     * shuffle equi-join on (cohort…, bucket) — no broadcast requirement, the
     * shape that survives a 100× cohort. Falls back to the dense pairs
-    * relation when the spec has no numeric feature. */
+    * relation when the spec has no numeric feature.
+    *
+    * Cosine: no |Δx| bound exists, but for r < 1 (sim threshold s = 1 − r
+    * > 0) the quadratic cosine bound yields a per-probe admissible
+    * x-interval — the same machinery as the cosine top-k, with the
+    * constant radius as the threshold. r ≥ 1 admits sim ≤ 0 pairs, which
+    * the bound cannot prune — dense fallback. */
   def withinRadiusBucketed(consent: DataFrame, noconsent: DataFrame,
                            spec: CohortSpec, radius: Double): DataFrame = {
     require(radius > 0, s"radius must be > 0, got $radius")
-    // cosine: no |Δx| bound exists, but for r < 1 (sim threshold s = 1 − r
-    // > 0) the quadratic cosine bound yields a per-probe admissible
-    // x-interval — the same machinery as the cosine top-k, with the
-    // constant radius as the threshold. r ≥ 1 admits sim ≤ 0 pairs, which
-    // the bound cannot prune — dense fallback.
-    if (spec.numCols.size == 1 && spec.metric == Cosine && radius < 1.0) {
-      val prep = bandPrep(consent, noconsent, spec)
-      val probes = (if (spec.cohortCols.nonEmpty)
-          prep.nc0.join(broadcast(prep.cStats), spec.cohortCols)
-        else prep.nc0.crossJoin(broadcast(prep.cStats)))
-        .withColumn("__dk", lit(radius))
-      return cosineBandCandidates(probes, prep.c0, spec)
-        .select(spec.cohortCols.map(col(_)) ++ Seq(col("nc_idx"),
-          col("nc_value"), col("c_idx"), col("c_value"), col("dist")): _*)
+    if (spec.numCols.size == 1 && spec.metric == Cosine && radius < 1.0)
+      cosineWithinRadius(consent, noconsent, spec, _.withColumn("__dk", lit(radius)))
+    else if (spec.numCols.isEmpty || !spec.metric.boundsNumericGap)
+      withinRadius(pairs(consent, noconsent, spec), radius)
+    else radiusBandJoin(prefixed(consent, spec, "c_"), prefixed(noconsent, spec, "nc_"),
+      spec, lit(radius), lit(radius))
+  }
+
+  /** Per-cohort-radius join WITHOUT the dense pairs relation — the
+    * band-pruned twin of [[withinRadiusPerCohort]] (same output, pinned by
+    * PropertySpec), with the bucket width set per cohort from its own
+    * radius. Same necessary-condition argument as [[withinRadiusBucketed]]:
+    * dist ≥ |Δx₁| under both metrics, so |Δx₁| ≤ r prunes soundly. Falls
+    * back to the dense relation when the spec has no numeric feature.
+    *
+    * Cosine: per-cohort radii ride the shared interval prune — the radius
+    * is just a per-row distance threshold (__dk). Cohorts whose radius
+    * admits sim ≤ 0 (r ≥ 1) make their probes wild and take the wildcard
+    * (dense per-cohort) tier automatically — no special-casing. */
+  def withinRadiusBucketedPerCohort(consent: DataFrame, noconsent: DataFrame,
+                                    radii: DataFrame, spec: CohortSpec,
+                                    broadcastConsent: Boolean = false): DataFrame = {
+    val coh = spec.cohortCols
+    if (spec.numCols.size == 1 && spec.metric == Cosine)
+      cosineWithinRadius(consent, noconsent, spec, joinCoh(_,
+        radii.select(coh.map(col(_)) :+ col("__radius").as("__dk"): _*), coh))
+    else if (spec.numCols.isEmpty || !spec.metric.boundsNumericGap)
+      withinRadiusPerCohort(
+        pairs(consent, noconsent, spec, broadcastConsent), radii, coh)
+    else {
+      // zero/negative radii (quantile of exact-duplicate distances) still
+      // need a positive bucket width for the floor(x/w) keys
+      val widths = radii.withColumn("__w", greatest(col("__radius"), lit(1e-6)))
+      radiusBandJoin(joinCoh(prefixed(consent, spec, "c_"), widths, coh),
+        joinCoh(prefixed(noconsent, spec, "nc_"), widths, coh),
+        spec, col("__w"), col("__radius"))
     }
-    if (spec.numCols.isEmpty || !spec.metric.boundsNumericGap)
-      return withinRadius(pairs(consent, noconsent, spec), radius)
-    val c0 = prefixed(consent, spec, "c_")
-    val nc0 = prefixed(noconsent, spec, "nc_")
+  }
+
+  /** The 3-bucket band join behind both bucketed radius joins: consent rows
+    * keyed by floor(x₁/width), each probe exploded over its bucket ±1, one
+    * equi-join on (cohort…, bucket), then the exact dist ≤ radius filter.
+    * `width` and `radius` are literals, or the `__w` / `__radius` columns a
+    * per-cohort caller joined onto both sides (the consent copies are
+    * dropped before the join). Sound whenever width ≥ radius. */
+  private def radiusBandJoin(c0: DataFrame, nc0: DataFrame, spec: CohortSpec,
+                             width: Column, radius: Column): DataFrame = {
     val x = spec.numCols.head
-    val cB = c0.withColumn("__bucket", floor(col(s"c_$x") / radius).cast("long"))
+    val cB = c0.withColumn("__bucket", floor(col(s"c_$x") / width).cast("long"))
+      .drop("__w", "__radius")
     val ncB = nc0.withColumn("__bucket", explode(array(Seq(-1L, 0L, 1L).map(d =>
-      floor(col(s"nc_$x") / radius).cast("long") + lit(d)): _*)))
-    val numPairs = spec.numCols.map(n => (col(s"nc_$n"), col(s"c_$n")))
+      floor(col(s"nc_$x") / width).cast("long") + lit(d)): _*)))
     ncB.join(cB, spec.cohortCols :+ "__bucket")
-      .withColumn("dist", spec.metric.dist(col("nc_features"), col("c_features"), numPairs))
+      .withColumn("dist", distCol(spec))
       .filter(col("dist") <= radius)
-      .drop((Seq("__bucket", "nc_features", "c_features") ++
-        spec.numCols.flatMap(n => Seq(s"nc_$n", s"c_$n"))): _*)
+      .drop(Seq("__bucket", "__w", "__radius") ++ featureCols(spec): _*)
   }
 
   /** Radius join with MinHash-LSH candidate pruning — the near-linear scale
@@ -263,208 +348,38 @@ object NeighborJoin {
     // relation is tiny and auto-broadcasts; with per-row-unique sets it is
     // output-sized and must stay a shuffle join — a forced broadcast would
     // OOM exactly at the scale this path exists for.
-    val iSize = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      org.apache.spark.sql.graftbridge.Bridge.column(
-        graft.expr.TokenIntersectionSize(
-          org.apache.spark.sql.graftbridge.Bridge.expression(a),
-          org.apache.spark.sql.graftbridge.Bridge.expression(b)))
     val sigPairs = buckets.as("x").join(buckets.as("y"), Seq("band", "key"))
       .select(col("x.__tsig").as("__tsig_nc"), col("y.__tsig").as("__tsig_c"),
         col("x.features").as("fa"), col("y.features").as("fb"))
       .filter(size(col("fa")) + size(col("fb"))
-        - lit(2) * iSize(col("fa"), col("fb")) <= tokenBound)
+        - lit(2) * TokenOps.intersectionSize(col("fa"), col("fb")) <= tokenBound)
       .select("__tsig_nc", "__tsig_c")
       .distinct()
-    val numPairs = spec.numCols.map(n => (col(s"nc_$n"), col(s"c_$n")))
     nc0.withColumn("__tsig_nc", xxhash64(col("nc_features")))
       .join(sigPairs, "__tsig_nc")
       .join(c0.withColumn("__tsig_c", xxhash64(col("c_features"))),
         spec.cohortCols :+ "__tsig_c")
-      .withColumn("dist", spec.metric.dist(col("nc_features"), col("c_features"), numPairs))
+      .withColumn("dist", distCol(spec))
       .filter(col("dist") <= radius)
-      .drop((Seq("__tsig_nc", "__tsig_c", "nc_features", "c_features") ++
-        spec.numCols.flatMap(n => Seq(s"nc_$n", s"c_$n"))): _*)
+      .drop(Seq("__tsig_nc", "__tsig_c") ++ featureCols(spec): _*)
   }
 
-  /** Cohort-scoped radius refinement: `radii` is (cohort…, __radius) — one
-    * row per cohort, so it broadcasts; the filter happens map-side on the
-    * pairs relation with no extra shuffle. */
-  def withinRadiusPerCohort(pairs: DataFrame, radii: DataFrame,
-                            cohortCols: Seq[String]): DataFrame = {
-    val joined =
-      if (cohortCols.nonEmpty) pairs.join(broadcast(radii), cohortCols)
-      else pairs.crossJoin(broadcast(radii))
-    joined.filter(col("dist") <= col("__radius")).drop("__radius")
-  }
-
-  /** Per-cohort-radius join WITHOUT the dense pairs relation — the
-    * band-pruned twin of [[withinRadiusPerCohort]] (same output, pinned by
-    * PropertySpec), with the bucket width set per cohort from its own
-    * radius. Same necessary-condition argument as [[withinRadiusBucketed]]:
-    * dist ≥ |Δx₁| under both metrics, so |Δx₁| ≤ r prunes soundly. Falls
-    * back to the dense relation when the spec has no numeric feature. */
-  def withinRadiusBucketedPerCohort(consent: DataFrame, noconsent: DataFrame,
-                                    radii: DataFrame, spec: CohortSpec,
-                                    broadcastConsent: Boolean = false): DataFrame = {
-    // cosine: per-cohort radii ride the shared interval prune — the radius
-    // is just a per-row distance threshold (__dk). Cohorts whose radius
-    // admits sim ≤ 0 (r ≥ 1) make their probes wild and take the wildcard
-    // (dense per-cohort) tier automatically — no special-casing.
-    if (spec.numCols.size == 1 && spec.metric == Cosine) {
-      val coh = spec.cohortCols
-      val prep = bandPrep(consent, noconsent, spec)
-      def joinCoh(df: DataFrame, small: DataFrame): DataFrame =
-        if (coh.nonEmpty) df.join(broadcast(small), coh)
-        else df.crossJoin(broadcast(small))
-      val probes = joinCoh(joinCoh(prep.nc0, prep.cStats),
-        radii.select(coh.map(col(_)) :+ col("__radius").as("__dk"): _*))
-      return cosineBandCandidates(probes, prep.c0, spec)
-        .select(coh.map(col(_)) ++ Seq(col("nc_idx"), col("nc_value"),
-          col("c_idx"), col("c_value"), col("dist")): _*)
-    }
-    if (spec.numCols.isEmpty || !spec.metric.boundsNumericGap)
-      return withinRadiusPerCohort(
-        pairs(consent, noconsent, spec, broadcastConsent), radii, spec.cohortCols)
-    val coh = spec.cohortCols
-    val x = spec.numCols.head
-    // zero/negative radii (quantile of exact-duplicate distances) still
-    // need a positive bucket width for the floor(x/w) keys
-    val widths = radii.withColumn("__w", greatest(col("__radius"), lit(1e-6)))
-    def joinCoh(df: DataFrame): DataFrame =
-      if (coh.nonEmpty) df.join(broadcast(widths), coh)
-      else df.crossJoin(broadcast(widths))
-    val cB = joinCoh(prefixed(consent, spec, "c_"))
-      .withColumn("__bucket", floor(col(s"c_$x") / col("__w")).cast("long"))
-      .drop("__w", "__radius")
-    val ncB = joinCoh(prefixed(noconsent, spec, "nc_"))
-      .withColumn("__bucket", explode(array(Seq(-1L, 0L, 1L).map(d =>
-        floor(col(s"nc_$x") / col("__w")).cast("long") + lit(d)): _*)))
-    val numPairs = spec.numCols.map(n => (col(s"nc_$n"), col(s"c_$n")))
-    ncB.join(cB, coh :+ "__bucket")
-      .withColumn("dist", spec.metric.dist(col("nc_features"), col("c_features"), numPairs))
-      .filter(col("dist") <= col("__radius"))
-      .drop((Seq("__bucket", "__w", "__radius", "nc_features", "c_features") ++
-        spec.numCols.flatMap(n => Seq(s"nc_$n", s"c_$n"))): _*)
-  }
-
-  /** Map-side top-k prune: within each input partition keep only the k
-    * best candidates per (cohort…, nc_idx) group, preserving the schema.
-    * This is the "partial aggregation" half of a scale-proof top-k — the
-    * shuffle that follows carries O(k · |NC| · #partitions-touched) rows
-    * instead of the full |NC|×|C| pairs relation. */
-  def topKLocalPrune(pairs: DataFrame, spec: CohortSpec, k: Int): DataFrame = {
-    import scala.collection.mutable
-    val schema = pairs.schema
-    val keyIdxs = (spec.cohortCols :+ "nc_idx").map(schema.fieldIndex)
-    val distIdx = schema.fieldIndex("dist")
-    val cIdxIdx = schema.fieldIndex("c_idx")
-    implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
-      org.apache.spark.sql.Encoders.row(schema)
-    pairs.mapPartitions { it =>
-      // per-group bounded max-heap ordered by (dist, c_idx): the head is the
-      // current worst retained candidate.
-      type Entry = (Double, Long, org.apache.spark.sql.Row)
-      val ord: Ordering[Entry] = Ordering.by(e => (e._1, e._2))
-      val heaps = mutable.HashMap.empty[Seq[Any], mutable.PriorityQueue[Entry]]
-      it.foreach { row =>
-        val key = keyIdxs.map(row.get)
-        val e: Entry = (row.getDouble(distIdx),
-          row.getAs[Number](cIdxIdx).longValue(), row)
-        val h = heaps.getOrElseUpdate(key, mutable.PriorityQueue.empty(ord))
-        if (h.size < k) h.enqueue(e)
-        else if (ord.lt(e, h.head)) { h.dequeue(); h.enqueue(e) }
-      }
-      heaps.valuesIterator.flatMap(_.iterator.map(_._3))
-    }
-  }
-
-  /** Exact fixed-k top-k with map-side combine: local prune, then the exact
-    * window rank on the (now tiny) survivor set. Result is identical to
-    * [[topK]] — pinned by CocoaInvariantsSpec — with a shuffle that stays O(k·|NC|). */
-  def topKCombined(pairs: DataFrame, spec: CohortSpec, k: Int): DataFrame =
-    topK(topKLocalPrune(pairs, spec, k), spec, k.toDouble)
-
-  /** Proportional k (k = frac·|cohort consent|) through the banded path,
-    * with EACH cohort's adaptive radius derived from its OWN resolved k —
-    * not the max across cohorts (running the band at kMax widened every
-    * small cohort's ±k window and radius to the biggest cohort's, measured
-    * 53 s at the 10× replica vs q58's ~13 s; the per-cohort k restores the
-    * banded family's near-linear shape). A cohort resolving to k = 0 emits
-    * nothing, matching the dense path's `rank <= 0` filter (the validated
-    * matcher route rejects that configuration earlier). Result equals
-    * [[topK]] with proportional resolution — same oracle as q39. */
-  def topKBandedProportional(consent: DataFrame, noconsent: DataFrame,
-                             spec: CohortSpec, frac: Double,
-                             broadcastConsent: Boolean = false): DataFrame = {
-    require(frac > 0 && frac < 1, s"proportional k must be in (0,1), got $frac")
-    if (spec.numCols.size == 1 && spec.metric == Cosine) {
-      val perCohort = resolveK(consent, spec, frac)
-        .getOrElse(throw new IllegalStateException("unreachable: frac < 1"))
-      return topKCosineBandedImpl(consent, noconsent, spec, Right(perCohort))
-    }
-    spec.metric match {
-      case Hamming(_) if spec.numCols.size <= 1 =>
-        val perCohort = resolveK(consent, spec, frac)
-          .getOrElse(throw new IllegalStateException("unreachable: frac < 1"))
-        return topKHammingImpl(consent, noconsent, spec, Right(perCohort))
-      case _ => ()
-    }
-    if (spec.numCols.size != 1 || spec.metric.bandBound.isEmpty)
-      return topK(pairs(consent, noconsent, spec, broadcastConsent), spec, frac,
-        Some(consent))
-    val perCohort = resolveK(consent, spec, frac)
-      .getOrElse(throw new IllegalStateException("unreachable: frac < 1"))
-    topKBandedImpl(consent, noconsent, spec, Right(perCohort))
-  }
-
-  /** Exact top-k WITHOUT the dense pairs relation — the plan that survives a
-    * 100× cohort (measured: the dense |NC|×|C| expansion is ~quadratic, 105 s
-    * at a 10× sf0.1 replica where this path holds near-linear).
+  /** Exact top-k WITHOUT the dense pairs relation where the metric and the
+    * feature shape allow it, `topK(pairs)` otherwise — the one kNN
+    * dispatch. `k` follows [[MatchStrategy.K]]: k ≥ 1 is a fixed k,
+    * 0 < k < 1 is proportional (`int(k·|cohort consent|)` per cohort, each
+    * cohort's adaptive radius derived from its OWN resolved k; a cohort
+    * resolving to 0 emits nothing, matching the dense `rank <= 0` filter).
     *
-    * Exactness argument, per noconsent row i (x = the single numeric
-    * feature; both metrics bound dist ≥ |Δx|):
-    *
-    *  1. The k consent rows nearest to i by |Δx| ALONE sit within ranks
-    *     [pos−k+1, pos+k] of the cohort's x-sorted consent order, where pos =
-    *     #{consent with x < nc.x} (|Δx| grows monotonically walking away from
-    *     the insertion point, ties included). c_x is monotone in rank, so
-    *     every row in that window has |Δx| ≤ D := max(gap at the window's
-    *     clamped endpoint ranks) — an upper bound on the exact 1-D k-NN
-    *     distance, derived from just the two endpoint rows.
-    *  2. Each of those k rows has full dist ≤ bound(D): manhattan
-    *     D + B, euclidean √(D² + B), with B = |nc tokens| + max |c tokens|
-    *     ≥ any token-part distance. So the TRUE k-th best dist ≤ bound(D).
-    *  3. Any consent row in the true top-k therefore has
-    *     |Δx| ≤ dist ≤ bound(D) — the adaptive per-row radius r_i. The
-    *     bucket band join below admits every row with |Δx| ≤ r_i, i.e. a
-    *     SUPERSET of the true top-k; the exact (dist, c_idx) window rank on
-    *     that superset selects identical rows to [[topK]] on the dense
-    *     relation (equivalence pinned by PropertySpec; q58 shares q09's
-    *     oracle).
-    *
-    * Plan shape: two rank windows over (|C|+|NC|) rows, an explode-equi-join
-    * of 2k ranks per probe (shuffle O(k·|NC|)), and a TWO-TIER bucket band
-    * join — every shuffle is keyed and near-linear; nothing materializes
-    * |NC|×|C|.
-    *
-    * Two-tier band width (skew hardening): a single probe in a sparse x
-    * region has a huge adaptive radius r_i; with one cohort-wide bucket
-    * width W = max r_i that ONE probe used to widen every bucket, inflating
-    * every other probe's candidate set (the self-identified skew risk of
-    * rounds 2–3). Instead the cohort's band width is the ~p99 of its radii:
-    * probes with r_i ≤ W go through the bucket band join (≤ 3 buckets each,
-    * candidates from a ±W window — tight for the bulk); the few wide-radius
-    * probes (≤ ~1% by construction) fall back to a per-cohort dense
-    * equi-join filtered by |Δx| ≤ r_i. Both tiers produce a superset of
-    * their probes' true top-k and each probe rides exactly one tier, so the
-    * final (dist, c_idx) window rank over the union is exact. Measured on a
-    * skewed cohort (one planted far-x probe per cohort, sf0.1): see
-    * DESIGN.md §10.
-    *
-    * Falls back to the dense path when the spec has no single numeric
-    * feature (the 1-D bound needs exactly one: with extra numeric columns
-    * dist ≥ |Δx₁| still holds but step 2's bound does not;
-    * `broadcastConsent` is forwarded there).
+    * Routes, each equal to `topK(pairs(c, nc, spec), spec, k, Some(c))`:
+    *  - one numeric feature, cosine → [[topKCosineBandedImpl]];
+    *  - hamming with ≤ 1 numeric feature → [[topKHammingImpl]];
+    *  - one numeric feature, a metric with a band bound (manhattan,
+    *    euclidean, chebyshev, minkowski) → [[topKBandedImpl]];
+    *  - otherwise the dense relation (`broadcastConsent` is forwarded
+    *    there). The 1-D bound needs exactly one numeric feature: with extra
+    *    numeric columns dist ≥ |Δx₁| still holds but the step-2 bound of
+    *    [[topKBandedImpl]] does not.
     *
     * Global cohort scope (`cohortCols == Nil`) is also scale-safe: a bare
     * window there would funnel all |C|+|NC| rows through ONE sort task, so
@@ -476,22 +391,22 @@ object NeighborJoin {
     *
     * A NULL/NaN numeric feature is invalid input (sklearn raises; the
     * matcher rejects it on the validated route) — unvalidated callers get a
-    * clear per-row error here instead of dense's silent nulls-first ranking
-    * or a cryptic element_at failure. */
+    * clear per-row error on the banded routes instead of dense's silent
+    * nulls-first ranking or a cryptic element_at failure. */
   def topKBanded(consent: DataFrame, noconsent: DataFrame,
-                 spec: CohortSpec, k: Int,
+                 spec: CohortSpec, k: Double,
                  broadcastConsent: Boolean = false): DataFrame = {
-    require(k >= 1, s"topKBanded needs a fixed k >= 1, got $k")
-    if (spec.numCols.size == 1 && spec.metric == Cosine)
-      return topKCosineBandedImpl(consent, noconsent, spec, Left(k))
-    spec.metric match {
-      case Hamming(_) if spec.numCols.size <= 1 =>
-        return topKHammingImpl(consent, noconsent, spec, Left(k))
-      case _ => ()
+    require(k > 0, s"k must be > 0, got $k")
+    val oneNumeric = spec.numCols.size == 1
+    (spec.metric, spec.metric.bandBound) match {
+      case (Cosine, _) if oneNumeric => topKCosineBandedImpl(consent, noconsent, spec, k)
+      case (Hamming(_), _) if spec.numCols.size <= 1 =>
+        topKHammingImpl(consent, noconsent, spec, k)
+      case (_, Some(bound)) if oneNumeric =>
+        topKBandedImpl(consent, noconsent, spec, k, bound)
+      case _ =>
+        topK(pairs(consent, noconsent, spec, broadcastConsent), spec, k, Some(consent))
     }
-    if (spec.numCols.size != 1 || spec.metric.bandBound.isEmpty)
-      return topK(pairs(consent, noconsent, spec, broadcastConsent), spec, k.toDouble)
-    topKBandedImpl(consent, noconsent, spec, Left(k))
   }
 
   /** Shared probe-prep of the banded top-k family (manhattan/euclidean/
@@ -538,9 +453,9 @@ object NeighborJoin {
     // plan equality instead of re-deriving cohort prep from source. The
     // guard itself is a per-row branch over the cached scan — free.
     val c0 = guardX("c_", prefixed(consent, spec, "c_")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(StorageLevel.MEMORY_AND_DISK))
     val nc0 = guardX("nc_", prefixed(noconsent, spec, "nc_")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .persist(StorageLevel.MEMORY_AND_DISK))
 
     // consent rows ranked by x within each cohort (0-based zipWithIndex in
     // the global form, hence the +1)
@@ -579,35 +494,99 @@ object NeighborJoin {
     BandPrep(c0, nc0, cRanked, cStats, pos)
   }
 
-  /** Shared body of [[topKBanded]] / [[topKBandedProportional]]: k arrives
-    * either as a constant (Left) or as a per-cohort `(cohort…, __k)` frame
-    * (Right, dimension-sized → broadcast). Requires exactly one numeric
-    * feature (callers fall back to the dense path otherwise). */
+  /** The conditional two-tier band join shared by [[topKBandedImpl]] and
+    * [[cosineBandCandidates]]. Probe rows carry the nc_* projection and the
+    * half-width `__r` of their admissible x-interval `[lo, hi]` (columns of
+    * the probe row); a null `__r` marks a wild probe — no usable interval.
+    * `cSide` is a c0-shaped relation.
+    *
+    * Two-tier band width (skew hardening): a single probe in a sparse x
+    * region has a huge interval; with one cohort-wide bucket width W = max
+    * `__r` that ONE probe used to widen every bucket, inflating every other
+    * probe's candidate set. Instead W ≈ the p99 of the cohort's half-widths
+    * (approx_percentile: mergeable partial agg, any cohort size). Bulk
+    * probes (r ≤ W) emit the ≤ 3 buckets their interval covers; the ≤ ~1%
+    * wild or wider probes emit ONE wildcard key, and each consent row rides
+    * under its real bucket plus — ONLY in cohorts that actually have such a
+    * probe — a wildcard replica. So one equi-join serves both tiers, and the
+    * common no-skew cohort pays zero for the wildcard machinery. No second
+    * join branch, no union: the probe-prep lineage is planned once (a
+    * two-branch union measured ~+0.6 s/query at sf0.1 from the duplicated
+    * subtree). The wildcard lives in its OWN key space — the join key is
+    * (tier, bucket), tier 1 = wildcard — so no bucket value can ever collide
+    * with it. Each probe rides exactly one tier, so the per-probe rank over
+    * the joined superset is exact. Measured on a skewed cohort (one planted
+    * far-x probe per cohort, sf0.1): see DESIGN.md §10.
+    *
+    * The probes feed both the widths aggregate and the banded probe side, so
+    * callers pass them persisted. Returns the raw join; each caller applies
+    * its own exact admissibility filter. */
+  private def tieredBandJoin(probes: DataFrame, cSide: DataFrame, spec: CohortSpec,
+                             lo: Column, hi: Column): DataFrame = {
+    val coh = spec.cohortCols
+    val x = spec.numCols.head
+    // a wild probe (null __r) counts as infinitely wide: its cohort's
+    // consent rows get the wildcard replica
+    val widths = probes.groupBy(coh.map(col(_)): _*)
+      .agg(greatest(percentile_approx(col("__r"), lit(0.99), lit(1000)),
+        lit(1e-6)).as("__w"),
+        max(coalesce(col("__r"), lit(Double.PositiveInfinity))).as("__rmax"))
+    val tb = (t: Int, b: Column) => struct(lit(t).as("tier"), b.as("bucket"))
+    val bucket = (v: Column) => floor(v / col("__w")).cast("long")
+    val split = (df: DataFrame) => df
+      .withColumn("__tier", col("__tb.tier"))
+      .withColumn("__bucket", col("__tb.bucket"))
+      .drop("__tb", "__rmax")
+    val ncB = split(joinCoh(probes, widths, coh)
+      .withColumn("__tb", explode(
+        when(col("__r") <= col("__w"), transform(
+          sequence(bucket(lo), bucket(hi)), b => tb(0, b)))
+        .otherwise(array(tb(1, lit(0L)))))))
+    val cB = split(joinCoh(cSide, widths, coh)
+      .withColumn("__tb", explode(
+        when(col("__rmax") > col("__w"),
+          array(tb(0, bucket(col(s"c_$x"))), tb(1, lit(0L))))
+        .otherwise(array(tb(0, bucket(col(s"c_$x"))))))))
+      .drop("__w")
+    ncB.join(cB, coh ++ Seq("__tier", "__bucket"))
+  }
+
+  /** Banded exact top-k for metrics with a band bound, one numeric feature
+    * — the plan that survives a 100× cohort (measured: the dense |NC|×|C|
+    * expansion is ~quadratic, 105 s at a 10× sf0.1 replica where this path
+    * holds near-linear).
+    *
+    * Exactness argument, per noconsent row i (x = the single numeric
+    * feature; both metrics bound dist ≥ |Δx|):
+    *
+    *  1. The k consent rows nearest to i by |Δx| ALONE sit within ranks
+    *     [pos−k+1, pos+k] of the cohort's x-sorted consent order, where pos =
+    *     #{consent with x < nc.x} (|Δx| grows monotonically walking away from
+    *     the insertion point, ties included). c_x is monotone in rank, so
+    *     every row in that window has |Δx| ≤ D := max(gap at the window's
+    *     clamped endpoint ranks) — an upper bound on the exact 1-D k-NN
+    *     distance, derived from just the two endpoint rows.
+    *  2. Each of those k rows has full dist ≤ bound(D): manhattan
+    *     D + B, euclidean √(D² + B), with B = |nc tokens| + max |c tokens|
+    *     ≥ any token-part distance. So the TRUE k-th best dist ≤ bound(D).
+    *  3. Any consent row in the true top-k therefore has
+    *     |Δx| ≤ dist ≤ bound(D) — the adaptive per-row radius r_i. The
+    *     two-tier band join ([[tieredBandJoin]], interval [x − r_i, x + r_i])
+    *     admits every row with |Δx| ≤ r_i, i.e. a SUPERSET of the true
+    *     top-k; the exact (dist, c_idx) window rank on that superset selects
+    *     identical rows to [[topK]] on the dense relation (equivalence
+    *     pinned by PropertySpec; q58 shares q09's oracle).
+    *
+    * Plan shape: two rank windows over (|C|+|NC|) rows, two |NC|-row
+    * equi-joins against the rank relation, and the two-tier bucket band
+    * join — every shuffle is keyed and near-linear; nothing materializes
+    * |NC|×|C|. */
   private def topKBandedImpl(consent: DataFrame, noconsent: DataFrame,
-                             spec: CohortSpec,
-                             kSpec: Either[Int, DataFrame]): DataFrame = {
+                             spec: CohortSpec, k: Double,
+                             bound: (Column, Column) => Column): DataFrame = {
     val coh = spec.cohortCols
     val x = spec.numCols.head
     val prep = bandPrep(consent, noconsent, spec)
-    val nc0 = prep.nc0
-    val cRanked = prep.cRanked
-    val cStats = prep.cStats
-    val pos = prep.pos
-
-    // broadcast-join a dimension-sized per-cohort frame (cross when the
-    // spec has no cohort scope — both frames are then single-row/global).
-    def joinCoh(df: DataFrame, small: DataFrame): DataFrame =
-      if (coh.nonEmpty) df.join(broadcast(small), coh)
-      else df.crossJoin(broadcast(small))
-
-    // per-probe k as a column: a constant stays a folded literal; the
-    // per-cohort frame (Right) is dimension-sized → broadcast.
-    def withK(df: DataFrame): DataFrame = kSpec match {
-      case Left(k) => df.withColumn("__kk", lit(k.toLong))
-      case Right(perCohort) =>
-        joinCoh(df, perCohort.select(
-          coh.map(col(_)) :+ col("__k").cast("long").as("__kk"): _*))
-    }
 
     // the ±k rank window per probe, reduced to its TWO ENDPOINTS: the k
     // consent rows nearest to the probe by |Δx| sit within ranks
@@ -625,12 +604,12 @@ object NeighborJoin {
     // Cohorts resolving to k = 0 (proportional k on a tiny cohort) emit no
     // candidates at all — matching the dense path's `rank <= 0` filter.
     val joinKeys = coh :+ "nc_idx"
-    val probes = withK(nc0.select(coh.map(col(_)) ++
-      Seq(col("nc_idx"), col(s"nc_$x")): _*).join(pos, joinKeys))
+    val probes = withK(prep.nc0.select(coh.map(col(_)) ++
+      Seq(col("nc_idx"), col(s"nc_$x")): _*).join(prep.pos, joinKeys), consent, spec, k)
       .filter(col("__kk") >= 1)
-    val cxByRank = (rn: String, cx: String) => cRanked.select(
+    val cxByRank = (rn: String, cx: String) => prep.cRanked.select(
       coh.map(col(_)) ++ Seq(col("__rn").as(rn), col(s"c_$x").as(cx)): _*)
-    val dxK = joinCoh(probes, cStats)
+    val dxK = joinCoh(probes, prep.cStats, coh)
       .withColumn("__lo", greatest(col("__pos") - (col("__kk") - lit(1L)), lit(1L)))
       .withColumn("__hi", least(col("__pos") + col("__kk"), col("__cnt")))
       .join(cxByRank("__lo", "__cxlo"), coh :+ "__lo")
@@ -639,77 +618,20 @@ object NeighborJoin {
         greatest(abs(col(s"nc_$x") - col("__cxlo")),
           abs(col(s"nc_$x") - col("__cxhi"))).as("__d")): _*)
 
-    // adaptive radius r_i = bound(D); TWO-TIER cohort band width W ≈ the
-    // p99 of the cohort's radii (approx_percentile: mergeable partial agg,
-    // any cohort size). Probes with r_i ≤ W ride the bucket band join
-    // (≤ 3 buckets each); the few wider probes fall back to a per-cohort
-    // dense join so one sparse-region probe can't widen everyone's buckets.
-    val bound = spec.metric.bandBound.getOrElse(
-      throw new IllegalStateException(
-        s"metric ${spec.metric.name} has no band bound — callers fall back dense"))
-    // PERSISTED for the same reason as the cosine probesD: ncD feeds the
-    // widths aggregate AND the banded probe side, and its lineage holds
-    // the dxK endpoint derivation (two joins against the rank relation).
+    // adaptive radius r_i = bound(D), the interval [x − r_i, x + r_i]; no
+    // probe is wild — the bound always exists. PERSISTED: ncD feeds the
+    // widths aggregate AND the banded probe side, and its lineage holds the
+    // dxK endpoint derivation (two joins against the rank relation).
     // O(|NC|) narrow rows; an r5 note measured this pin as neutral at
     // sf0.1 — at the 10× replica the duplicated subtree is no longer free.
-    val ncD = joinCoh(nc0.join(dxK, joinKeys), cStats)
+    val ncD = joinCoh(prep.nc0.join(dxK, joinKeys), prep.cStats, coh)
       .withColumn("__b0", size(col("nc_features")) + col("__cmaxtok"))
       .withColumn("__r", bound(col("__d"), col("__b0")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val widths = ncD.groupBy(coh.map(col(_)): _*)
-      .agg(greatest(percentile_approx(col("__r"), lit(0.99), lit(1000)),
-        lit(1e-6)).as("__w"),
-        max(col("__r")).as("__rmax"))
-    // Single-join two-tier: bulk probes (r ≤ W) emit their ±r bucket range
-    // (≤ 3 buckets); the ≤ ~1% wide probes emit ONE wildcard key, and each
-    // consent row rides under its real bucket plus — ONLY in cohorts that
-    // actually have a wide probe (rmax > W) — a wildcard replica. So one
-    // equi-join serves both tiers, and the common no-skew cohort pays zero
-    // for the wildcard machinery (the r4 fold replicated consent
-    // unconditionally; r5 makes the replica conditional). No second join
-    // branch, no union: the probe-prep lineage is planned once (a
-    // two-branch union measured ~+0.6 s/query at sf0.1 from the duplicated
-    // subtree). The wildcard lives in its OWN key space — the join key is
-    // (tier, bucket), tier 1 = wildcard — so no bucket value can ever
-    // collide with it (the r4 Long.MinValue sentinel could, if
-    // floor(x/w) saturated on the double→long cast).
-    val tb = (t: Int, b: org.apache.spark.sql.Column) =>
-      struct(lit(t).as("tier"), b.as("bucket"))
-    val ncB = joinCoh(ncD, widths)
-      .withColumn("__tb", explode(
-        when(col("__r") <= col("__w"), transform(sequence(
-          floor((col(s"nc_$x") - col("__r")) / col("__w")).cast("long"),
-          floor((col(s"nc_$x") + col("__r")) / col("__w")).cast("long")),
-          b => tb(0, b)))
-        .otherwise(array(tb(1, lit(0L))))))
-      .withColumn("__tier", col("__tb.tier"))
-      .withColumn("__bucket", col("__tb.bucket"))
-      .drop("__tb", "__rmax")
-    val cB = joinCoh(cRanked.drop("__rn"), widths)
-      .withColumn("__tb", explode(
-        when(col("__rmax") > col("__w"),
-          array(tb(0, floor(col(s"c_$x") / col("__w")).cast("long")),
-            tb(1, lit(0L))))
-        .otherwise(array(tb(0, floor(col(s"c_$x") / col("__w")).cast("long"))))))
-      .withColumn("__tier", col("__tb.tier"))
-      .withColumn("__bucket", col("__tb.bucket"))
-      .drop("__tb", "__w", "__rmax")
-
-    val numPairs = spec.numCols.map(n => (col(s"nc_$n"), col(s"c_$n")))
-    val cand = ncB.join(cB, coh ++ Seq("__tier", "__bucket"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    rankWithinK(tieredBandJoin(ncD, prep.cRanked.drop("__rn"), spec,
+        col(s"nc_$x") - col("__r"), col(s"nc_$x") + col("__r"))
       .filter(abs(col(s"nc_$x") - col(s"c_$x")) <= col("__r"))
-      .withColumn("dist", spec.metric.dist(col("nc_features"), col("c_features"), numPairs))
-
-    // each probe rides exactly one tier (real buckets xor wildcard), so the
-    // per-probe rank is computed on that probe's own candidate superset —
-    // exact.
-    val w = Window
-      .partitionBy((coh :+ "nc_idx").map(col(_)): _*)
-      .orderBy(col("dist").asc, col("c_idx").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= col("__kk"))
-      .select(coh.map(col(_)) ++ Seq(col("nc_idx"), col("nc_value"),
-        col("c_idx"), col("c_value"), col("dist"), col("rank")): _*)
+      .withColumn("dist", distCol(spec)), coh)
   }
 
   /** Exact COSINE top-k without the dense pairs relation. Cosine is
@@ -742,32 +664,14 @@ object NeighborJoin {
     * The interval is padded by a relative ε against root-finding roundoff
     * (padding only widens the superset). Probes with fewer than k phase-1
     * candidates, s ≤ 0 (weak bound), or an unusable interval fall back to
-    * the wildcard tier — the same conditional two-tier single equi-join as
-    * [[topKBandedImpl]], so one skewed probe never widens its cohort's
-    * buckets. Everything shuffles O(k·|NC| + (|C|+|NC|)·buckets) — nothing
-    * materializes |NC|×|C|. */
+    * the wildcard tier of [[tieredBandJoin]], so one skewed probe never
+    * widens its cohort's buckets. Everything shuffles
+    * O(k·|NC| + (|C|+|NC|)·buckets) — nothing materializes |NC|×|C|. */
   private def topKCosineBandedImpl(consent: DataFrame, noconsent: DataFrame,
-                                   spec: CohortSpec,
-                                   kSpec: Either[Int, DataFrame]): DataFrame = {
+                                   spec: CohortSpec, k: Double): DataFrame = {
     val coh = spec.cohortCols
     val x = spec.numCols.head
     val prep = bandPrep(consent, noconsent, spec)
-    val nc0 = prep.nc0
-    val cRanked = prep.cRanked
-    val cStats = prep.cStats
-    val pos = prep.pos
-    def joinCoh(df: DataFrame, small: DataFrame): DataFrame =
-      if (coh.nonEmpty) df.join(broadcast(small), coh)
-      else df.crossJoin(broadcast(small))
-    // per-probe k as a column — constant (folded literal) or per-cohort
-    // broadcast frame, exactly as in topKBandedImpl; k = 0 cohorts
-    // (proportional on a tiny cohort) emit nothing like dense's rank <= 0.
-    def withK(df: DataFrame): DataFrame = kSpec match {
-      case Left(k) => df.withColumn("__kk", lit(k.toLong))
-      case Right(perCohort) =>
-        joinCoh(df, perCohort.select(
-          coh.map(col(_)) :+ col("__k").cast("long").as("__kk"): _*))
-    }
     val joinKeys = coh :+ "nc_idx"
 
     // phase 1: a ±max(k, 16) rank window per probe, scored EXACTLY (unlike
@@ -780,7 +684,10 @@ object NeighborJoin {
     // token part dominates cosine; the ±k x-neighbors alone often share no
     // tokens, putting d_k near the metric's ceiling and degrading phase 2
     // toward the dense candidate volume) at O(16·|NC|) extra phase-1 rows.
-    val probes = withK(joinCoh(nc0.join(pos, joinKeys), cStats))
+    // k = 0 cohorts (proportional on a tiny cohort) emit nothing like
+    // dense's rank <= 0.
+    val probes = withK(joinCoh(prep.nc0.join(prep.pos, joinKeys), prep.cStats, coh),
+      consent, spec, k)
       .filter(col("__kk") >= 1)
     val cand1 = probes
       .withColumn("__kw", greatest(col("__kk"), lit(16L)))
@@ -788,7 +695,7 @@ object NeighborJoin {
       .withColumn("__hi", least(col("__pos") + col("__kw"), col("__cnt")))
       .filter(col("__hi") >= col("__lo"))
       .withColumn("__rn", explode(sequence(col("__lo"), col("__hi"))))
-      .join(cRanked.select(coh.map(col(_)) ++ Seq(
+      .join(prep.cRanked.select(coh.map(col(_)) ++ Seq(
         col("__rn"), col("c_idx").as("__c1idx"),
         col("c_features").as("__c1f"), col(s"c_$x").as("__c1x")): _*),
         coh :+ "__rn")
@@ -808,35 +715,33 @@ object NeighborJoin {
     // safe: every true top-k row has dist ≤ d_k and ≥ k candidate rows
     // survive it, so removing dist > d_k rows changes neither the top-k
     // rows nor their rank numbers.
-    val cand = cosineBandCandidates(probes.join(dk, joinKeys),
-      cRanked.drop("__rn"), spec)
-    val w = Window
-      .partitionBy(joinKeys.map(col(_)): _*)
-      .orderBy(col("dist").asc, col("c_idx").asc)
-    cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= col("__kk"))
-      .select(coh.map(col(_)) ++ Seq(col("nc_idx"), col("nc_value"),
-        col("c_idx"), col("c_value"), col("dist"), col("rank")): _*)
+    rankWithinK(cosineBandCandidates(probes.join(dk, joinKeys),
+      prep.cRanked.drop("__rn"), spec), coh)
+  }
+
+  /** The cosine radius joins: the radius is just the per-probe threshold
+    * `__dk` that `withDk` attaches (a literal, or a per-cohort broadcast
+    * column) before the shared interval prune. */
+  private def cosineWithinRadius(consent: DataFrame, noconsent: DataFrame,
+                                 spec: CohortSpec,
+                                 withDk: DataFrame => DataFrame): DataFrame = {
+    val prep = bandPrep(consent, noconsent, spec)
+    cosineBandCandidates(withDk(joinCoh(prep.nc0, prep.cStats, spec.cohortCols)),
+      prep.c0, spec).select(pairCols(spec.cohortCols): _*)
   }
 
   /** Shared phase-2 of the cosine prunes ([[topKCosineBandedImpl]] and the
-    * cosine branch of [[withinRadiusBucketed]]): probe rows arrive carrying
-    * the nc_* projection, `__cmintok` (cohort min consent token size) and
-    * `__dk` — the per-probe distance threshold (the phase-1 k-th best for
-    * top-k, the constant radius for the radius join; null = no bound).
-    * Attaches the admissible x-interval from the quadratic cosine bound
-    * (ε-padded: padding only widens the superset), runs the conditional
-    * two-tier wildcard band join against `cSide` (a c0-shaped relation),
-    * and returns candidates with the exact `dist` column, filtered to the
-    * interval and to dist ≤ __dk (when non-null). */
-  private def cosineBandCandidates(probesD0: DataFrame, cSide: DataFrame,
+    * cosine radius joins): probe rows arrive carrying the nc_* projection,
+    * `__cmintok` (cohort min consent token size) and `__dk` — the per-probe
+    * distance threshold (the phase-1 k-th best for top-k, the radius for
+    * the radius joins; null = no bound). Attaches the admissible x-interval
+    * from the quadratic cosine bound (ε-padded: padding only widens the
+    * superset), runs the two-tier band join against `cSide` (a c0-shaped
+    * relation), and returns candidates with the exact `dist` column,
+    * filtered to the interval and to dist ≤ __dk (when non-null). */
+  private def cosineBandCandidates(probes: DataFrame, cSide: DataFrame,
                                    spec: CohortSpec): DataFrame = {
-    val coh = spec.cohortCols
     val x = spec.numCols.head
-    def joinCoh(df: DataFrame, small: DataFrame): DataFrame =
-      if (coh.nonEmpty) df.join(broadcast(small), coh)
-      else df.crossJoin(broadcast(small))
-    val numPairs = Seq((col(s"nc_$x"), col(s"c_$x")))
     val A = size(col("nc_features")).cast("double")
     val xa = col(s"nc_$x")
     val s = lit(1.0) - col("__dk") - lit(1e-9) // ε-loosened: superset-safe
@@ -844,13 +749,13 @@ object NeighborJoin {
     val a2 = xa * xa - c2
     val m = col("__cmintok").cast("double")
     val disc = c2 * (A * A + m * a2)
-    // PERSISTED: probesD feeds both the widths aggregate and the banded
-    // probe side, and its lineage carries the whole phase-1 d_k subtree
-    // (the ±max(k,16) explode + per-probe sort-agg). Without the pin each
-    // consumer re-evaluates that subtree — measured at the 10× replica as
-    // THREE ObjectHashAggregate passes over the 1.6M-row phase-1 relation
-    // (~140 s of task time) that this one narrow O(|NC|)-row cache removes.
-    val probesD = probesD0
+    // a wild probe has null roots, hence a null __r. PERSISTED: probesD
+    // feeds both the widths aggregate and the banded probe side, and its
+    // lineage carries the whole phase-1 d_k subtree (the ±max(k,16) explode
+    // + per-probe sort-agg). Without the pin each consumer re-evaluates that
+    // subtree — measured at the 10× replica as THREE ObjectHashAggregate
+    // passes over the 1.6M-row phase-1 relation (~140 s of task time).
+    val probesD = probes
       .withColumn("__wild",
         col("__dk").isNull || s <= 0 || a2 >= 0 || disc < 0)
       .withColumn("__r1", when(!col("__wild"), (-(A * xa) + sqrt(disc)) / a2))
@@ -861,43 +766,11 @@ object NeighborJoin {
       .withColumn("__ihi", greatest(col("__r1"), col("__r2")) + col("__pad"))
       .withColumn("__r", (col("__ihi") - col("__ilo")) / lit(2.0))
       .drop("__r1", "__r2", "__pad", "__lo", "__hi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // the same conditional two-tier single equi-join as topKBandedImpl:
-    // W = p99 of the non-wild interval half-widths; wild or wider-than-W
-    // probes ride the wildcard tier, consent replicates into it only in
-    // cohorts that have such probes.
-    val widths = probesD.groupBy(coh.map(col(_)): _*)
-      .agg(greatest(percentile_approx(col("__r"), lit(0.99), lit(1000)),
-        lit(1e-6)).as("__w"),
-        max(col("__r")).as("__rmax"),
-        max(col("__wild").cast("int")).as("__anywild"))
-    val tb = (t: Int, b: org.apache.spark.sql.Column) =>
-      struct(lit(t).as("tier"), b.as("bucket"))
-    val ncB = joinCoh(probesD, widths)
-      .withColumn("__tb", explode(
-        when(!col("__wild") && col("__r") <= col("__w"), transform(sequence(
-          floor(col("__ilo") / col("__w")).cast("long"),
-          floor(col("__ihi") / col("__w")).cast("long")),
-          b => tb(0, b)))
-        .otherwise(array(tb(1, lit(0L))))))
-      .withColumn("__tier", col("__tb.tier"))
-      .withColumn("__bucket", col("__tb.bucket"))
-      .drop("__tb", "__rmax", "__anywild")
-    val cB = joinCoh(cSide, widths)
-      .withColumn("__tb", explode(
-        when(col("__anywild") === 1 || col("__rmax") > col("__w"),
-          array(tb(0, floor(col(s"c_$x") / col("__w")).cast("long")),
-            tb(1, lit(0L))))
-        .otherwise(array(tb(0, floor(col(s"c_$x") / col("__w")).cast("long"))))))
-      .withColumn("__tier", col("__tb.tier"))
-      .withColumn("__bucket", col("__tb.bucket"))
-      .drop("__tb", "__w", "__rmax", "__anywild")
-
-    ncB.join(cB, coh ++ Seq("__tier", "__bucket"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    tieredBandJoin(probesD, cSide, spec, col("__ilo"), col("__ihi"))
       .filter(col("__wild") ||
         (col(s"c_$x") >= col("__ilo") && col(s"c_$x") <= col("__ihi")))
-      .withColumn("dist", spec.metric.dist(col("nc_features"), col("c_features"), numPairs))
+      .withColumn("dist", distCol(spec))
       .filter(col("__dk").isNull || col("dist") <= col("__dk"))
   }
 
@@ -910,7 +783,7 @@ object NeighborJoin {
     * ≤ m−2 has dist·W ≥ 4. Every subset-candidate therefore STRICTLY beats
     * every non-candidate (no tie can straddle the boundary, which is also
     * why |numCols| ≤ 1 is required — a second numeric closes the gap to a
-    * tie and the caller falls back dense).
+    * tie and [[topKBanded]] routes dense).
     *
     * Plan: each side emits its m "drop-token-i" subset signatures
     * (explode ×m); one equi-join on (cohort, i, hash(subset)) yields every
@@ -926,18 +799,8 @@ object NeighborJoin {
     * Equals [[topK]] on the dense relation (PropertySpec pins arbitrary +
     * skewed cohorts; q70 keeps the dense-derived hash oracle). */
   private def topKHammingImpl(consent: DataFrame, noconsent: DataFrame,
-                              spec: CohortSpec,
-                              kSpec: Either[Int, DataFrame]): DataFrame = {
+                              spec: CohortSpec, k: Double): DataFrame = {
     val coh = spec.cohortCols
-    def dense(): DataFrame = kSpec match {
-      case Left(k) => topK(pairs(consent, noconsent, spec), spec, k.toDouble)
-      case Right(perCohort) =>
-        val ranked = topK(pairs(consent, noconsent, spec), spec, Double.MaxValue)
-        val withk =
-          if (coh.nonEmpty) ranked.join(broadcast(perCohort), coh)
-          else ranked.crossJoin(broadcast(perCohort))
-        withk.filter(col("rank") <= col("__k")).drop("__k")
-    }
     val c0 = prefixed(consent, spec, "c_")
     val nc0 = prefixed(noconsent, spec, "nc_")
     // fixed token arity is the load-bearing fact — data-verify it (one tiny
@@ -947,13 +810,8 @@ object NeighborJoin {
       .union(nc0.select(size(col("nc_features")).as("__s")))
       .agg(min(col("__s")), max(col("__s"))).head()
     if (ar.isNullAt(0) || ar.getInt(0) != ar.getInt(1) || ar.getInt(0) < 2)
-      return dense()
+      return topK(pairs(consent, noconsent, spec), spec, k, Some(consent))
     val m = ar.getInt(0)
-    spec.metric match {
-      case Hamming(_) => ()
-      case other => throw new IllegalStateException(
-        s"topKHammingImpl dispatched for metric ${other.name}")
-    }
     // subset signature i = the token array with position i removed, used
     // DIRECTLY as the join key (array equality is exact — a hash key could
     // collide and duplicate a true pair at a second index, corrupting
@@ -963,60 +821,34 @@ object NeighborJoin {
         .withColumn("__key",
           concat(slice(col(s"${p}features"), lit(1), col("__i")),
             slice(col(s"${p}features"), col("__i") + 2, lit(m) - col("__i") - 1)))
-    val numPairs = spec.numCols.map(n => (col(s"nc_$n"), col(s"c_$n")))
-    val iSize = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-      org.apache.spark.sql.graftbridge.Bridge.column(
-        graft.expr.TokenIntersectionSize(
-          org.apache.spark.sql.graftbridge.Bridge.expression(a),
-          org.apache.spark.sql.graftbridge.Bridge.expression(b)))
     val cand = withKeys(nc0, "nc_").join(withKeys(c0, "c_"), coh ++ Seq("__i", "__key"))
       // dedup map-side, no shuffle: the only multi-key matches are pairs
       // sharing ALL m tokens (they match every subset key) — keep their
       // __i = 0 copy only; a pair sharing exactly m−1 matches one key
-      .filter(col("__i") === 0 || iSize(col("nc_features"), col("c_features")) < m)
-      .select(coh.map(col(_)) ++ Seq(col("nc_idx"), col("nc_value"),
-        col("c_idx"), col("c_value"),
-        spec.metric.dist(col("nc_features"), col("c_features"), numPairs)
-          .as("dist")): _*)
-    // per-probe k: constant or per-cohort broadcast frame
-    def withK(df: DataFrame): DataFrame = kSpec match {
-      case Left(k) => df.withColumn("__kk", lit(k.toLong))
-      case Right(perCohort) =>
-        val pk = perCohort.select(
-          coh.map(col(_)) :+ col("__k").cast("long").as("__kk"): _*)
-        if (coh.nonEmpty) df.join(broadcast(pk), coh)
-        else df.crossJoin(broadcast(pk))
-    }
+      .filter(col("__i") === 0 ||
+        TokenOps.intersectionSize(col("nc_features"), col("c_features")) < m)
+      .withColumn("dist", distCol(spec))
+      .select(pairCols(coh): _*)
     val joinKeys = coh :+ "nc_idx"
     val cnt = cand.groupBy(joinKeys.map(col(_)): _*)
       .agg(count(lit(1)).as("__cnt"))
-    val probes = withK(nc0.join(cnt, joinKeys, "left"))
+    val probes = withK(nc0.join(cnt, joinKeys, "left"), consent, spec, k)
       .withColumn("__wild", coalesce(col("__cnt"), lit(0L)) < col("__kk"))
     // wildcard tier: the (typically few) probes whose subset candidates
     // cannot fill k take the per-cohort dense relation — probe-exclusive
     // tiers, so each probe is ranked over exactly one sound superset
     val wildNc = probes.filter(col("__wild"))
-      .select((coh :+ "nc_idx").map(col(_)) ++
+      .select(joinKeys.map(col(_)) ++
         Seq(col("nc_value"), col("nc_features"), col("__kk")) ++
         spec.numCols.map(n => col(s"nc_$n")): _*)
     val wildPairs =
       (if (coh.nonEmpty) wildNc.join(c0, coh) else wildNc.crossJoin(c0))
-        .select(coh.map(col(_)) ++ Seq(col("nc_idx"), col("nc_value"),
-          col("c_idx"), col("c_value"),
-          spec.metric.dist(col("nc_features"), col("c_features"), numPairs)
-            .as("dist"), col("__kk")): _*)
+        .withColumn("dist", distCol(spec))
+        .select(pairCols(coh) :+ col("__kk"): _*)
     val bulk = cand
       .join(probes.filter(!col("__wild"))
         .select((joinKeys :+ "__kk").map(col(_)): _*), joinKeys)
-    val w = Window
-      .partitionBy(joinKeys.map(col(_)): _*)
-      .orderBy(col("dist").asc, col("c_idx").asc)
-    bulk.unionByName(wildPairs)
-      .filter(col("__kk") >= 1)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= col("__kk"))
-      .select(coh.map(col(_)) ++ Seq(col("nc_idx"), col("nc_value"),
-        col("c_idx"), col("c_value"), col("dist"), col("rank")): _*)
+    rankWithinK(bulk.unionByName(wildPairs), coh)
   }
 
 }

@@ -115,9 +115,9 @@ final class NearestCustomerMatcher(consent: DataFrame, spec: CohortSpec,
     // k=1 distances null, which sort FIRST and silently corrupt the radius
     checkFeatures(noconsent, "noconsent")
     val rspec = resolveSpec(noconsent)
-    val pairs = NeighborJoin.pairs(consent, noconsent, rspec, broadcastConsent)
-    Summary.minRadiusByPercentile(
-      Summary.nearestDistances(NeighborJoin.topK(pairs, rspec, 1.0), rspec),
+    // the same k=1 pass as the pipeline's percentile strategy
+    Summary.minRadiusByPercentile(Summary.nearestDistances(
+      NeighborJoin.topKBanded(consent, noconsent, rspec, 1, broadcastConsent), rspec),
       percentile)
   }
 }

@@ -39,28 +39,17 @@ object CocoaPipeline {
   }
 
   /** One adjustment run under any [[MatchStrategy]]. `consent`/`noconsent`
-    * must already carry `spec.tokenCol` (+ numeric features). */
+    * must already carry `spec.tokenCol` (+ numeric features). Each strategy
+    * maps to one planned [[NeighborJoin]] call, which alone picks the
+    * pruned or dense route for the metric and feature shape. */
   def run(consent: DataFrame, noconsent: DataFrame, spec: CohortSpec,
           strategy: MatchStrategy,
           broadcastConsent: Boolean = false): AdjustmentResult = {
-    lazy val allPairs = NeighborJoin.pairs(consent, noconsent, spec, broadcastConsent)
-    strategy match {
-      // Fixed k with a single numeric feature: the banded exact top-k —
-      // never materializes the |NC|×|C| pairs relation (near-linear at a
-      // 10× replica where the dense expansion is ~quadratic; equivalence
-      // pinned by PropertySpec and q58's shared oracle).
-      case MatchStrategy.K(k) if k >= 1 && spec.numCols.size == 1 =>
-        finish(consent, noconsent,
-          NeighborJoin.topKBanded(consent, noconsent, spec, k.toInt,
-            broadcastConsent), spec)
+    val selected = strategy match {
       case MatchStrategy.K(k) =>
-        finish(consent, noconsent,
-          NeighborJoin.topK(allPairs, spec, k, Some(consent)), spec)
+        NeighborJoin.topKBanded(consent, noconsent, spec, k, broadcastConsent)
       case MatchStrategy.Radius(r) =>
-        // Static radius: the band-pruned join (necessary |Δx| ≤ r condition
-        // on the first numeric feature) replaces the dense pairs relation.
-        finish(consent, noconsent,
-          NeighborJoin.withinRadiusBucketed(consent, noconsent, spec, r), spec)
+        NeighborJoin.withinRadiusBucketed(consent, noconsent, spec, r)
       case MatchStrategy.Percentile(p) =>
         // Two-pass plan (reference :518-523): pass 1 = k=1 nearest distances;
         // radius = exact quantile PER COHORT (the reference computes it per
@@ -70,10 +59,6 @@ object CocoaPipeline {
         // nearest-distance relation (O(|NC|) rows) is worth holding —
         // caching the full pairs relation costs more in columnar-cache build
         // than recomputing the (codegen'd) distance join for pass 2.
-        // Both passes take the band-pruned paths when a numeric feature
-        // exists (banded top-1, per-cohort-width bucket radius join) — the
-        // dense pairs relation is never materialized; equivalence pinned by
-        // PropertySpec.
         // No pipeline-level cohort persist: pass 1's banded prep already
         // pins the prefixed cohort projections (bandPrep c0/nc0,
         // MEMORY_AND_DISK), and pass 2's radius join builds the IDENTICAL
@@ -82,17 +67,14 @@ object CocoaPipeline {
         // relation (measured r9: removing them cut q18 ~5.6 → 4.7 s steady
         // at sf0.1 with canaries flat); the r7 "cohort prep ran twice"
         // cost they targeted was really the pre-spread 1-task scan.
-        val pass1 =
-          if (spec.numCols.size == 1)
-            NeighborJoin.topKBanded(consent, noconsent, spec, 1, broadcastConsent)
-          else NeighborJoin.topK(allPairs, spec, 1.0)
-        val nearest = Summary.nearestDistances(pass1, spec)
+        val nearest = Summary.nearestDistances(
+          NeighborJoin.topKBanded(consent, noconsent, spec, 1, broadcastConsent), spec)
           .persist(StorageLevel.MEMORY_AND_DISK)
         val radii = Summary.minRadiusByPercentilePerCohort(nearest, p, spec)
-        finish(consent, noconsent,
-          NeighborJoin.withinRadiusBucketedPerCohort(consent, noconsent, radii, spec,
-            broadcastConsent), spec)
+        NeighborJoin.withinRadiusBucketedPerCohort(consent, noconsent, radii, spec,
+          broadcastConsent)
     }
+    finish(consent, noconsent, selected, spec)
   }
 
   private def finish(consent: DataFrame, noconsent: DataFrame,

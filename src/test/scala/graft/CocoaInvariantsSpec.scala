@@ -218,17 +218,6 @@ class CocoaInvariantsSpec extends SparkSpec {
     }
   }
 
-  // --- two-phase top-k (map-side prune) must equal the window top-k.
-  test("topKCombined matches topK exactly") {
-    val pairs = NeighborJoin.pairs(encode(consentRaw), encode(noconsentRaw), spec)
-      .repartition(7) // force multiple partitions through the local prune
-    val a = NeighborJoin.topK(pairs, spec, 4.0)
-      .select("nc_idx", "c_idx", "rank").collect().map(_.toSeq).toSet
-    val b = NeighborJoin.topKCombined(pairs, spec, 4)
-      .select("nc_idx", "c_idx", "rank").collect().map(_.toSeq).toSet
-    assert(a == b)
-  }
-
   // --- band-pruned radius join must equal the dense theta join exactly.
   test("withinRadiusBucketed matches withinRadius on the dense pairs relation") {
     val c = encode(consentRaw)

@@ -1,6 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -49,6 +53,34 @@ class PropertySpec extends SparkSpec {
 
   private def samples(n: Int): Seq[(List[CRow], List[CRow])] =
     sampled(cohortGen, n, 0L)
+
+  /** `CocoaPipeline.run`'s tail (softmax shares, scatter-add, summary) fed
+    * with an explicitly chosen selected-pairs relation. */
+  private def tail(consent: DataFrame, noconsent: DataFrame, sel: DataFrame,
+                   sp: CohortSpec): AdjustmentResult =
+    AdjustmentResult(
+      Adjust.distribute(consent, Adjust.softmaxShares(sel, sp), sp),
+      Summary.matchedSummary(noconsent, Summary.nearestDistances(sel, sp), sp))
+
+  /** The two results hold the same rows: rows are matched on their
+    * non-double cells, doubles compared to a relative 1e-9 (two plans sum
+    * the same doubles in a different order). */
+  private def assertSameResult(a: AdjustmentResult, b: AdjustmentResult,
+                               clue: => String): Unit =
+    Seq((a.adjusted, b.adjusted), (a.summary, b.summary)).foreach { case (x, y) =>
+      val cols = x.columns.toSeq.sorted.map(col(_))
+      def rows(df: DataFrame) = df.select(cols: _*).collect().map(_.toSeq)
+        .sortBy(_.filterNot(_.isInstanceOf[Double]).mkString("|"))
+      val (rx, ry) = (rows(x), rows(y))
+      assert(rx.length == ry.length, clue)
+      rx.zip(ry).foreach { case (u, v) =>
+        u.zip(v).foreach {
+          case (d: Double, e: Double) =>
+            assert(math.abs(d - e) <= 1e-9 * math.max(1.0, math.abs(d)), s"$clue: $u vs $v")
+          case (p, q) => assert(p == q, s"$clue: $u vs $v")
+        }
+      }
+    }
 
   test("property: conservation + cardinality hold for arbitrary cohorts (K strategy)") {
     samples(8).foreach { case (c, nc) =>
@@ -108,6 +140,15 @@ class PropertySpec extends SparkSpec {
         val banded = NeighborJoin.topKBanded(encode(c), encode(nc), sp, k)
           .select("nc_idx", "c_idx", "rank", "dist").collect().map(_.toSeq).toSet
         assert(banded == dense, s"metric=$m k=$k c=$c nc=$nc")
+      }
+      // the matcher's percentile radius rides the same planned k=1 pass
+      for (m <- Seq(Manhattan, Cosine)) {
+        val sp = spec.copy(metric = m)
+        val dense = Summary.minRadiusByPercentile(Summary.nearestDistances(
+          NeighborJoin.topK(NeighborJoin.pairs(encode(c), encode(nc), sp), sp, 1.0), sp), 0.5)
+        val matched = new NearestCustomerMatcher(encode(c), sp)
+          .minRadiusByPercentile(encode(nc), 0.5)
+        assert(matched == dense, s"matcher metric=$m c=$c nc=$nc")
       }
     }
   }
@@ -219,9 +260,22 @@ class PropertySpec extends SparkSpec {
       val frac = 0.6
       val dp = NeighborJoin.topK(NeighborJoin.pairs(c, nc, hspec), hspec, frac, Some(c))
         .select("nc_idx", "c_idx", "rank", "dist").collect().map(_.toSeq).toSet
-      val pp = NeighborJoin.topKBandedProportional(c, nc, hspec, frac)
+      val pp = NeighborJoin.topKBanded(c, nc, hspec, frac)
         .select("nc_idx", "c_idx", "rank", "dist").collect().map(_.toSeq).toSet
       assert(pp == dp, s"proportional c=$c0 nc=$nc0")
+      // no numeric feature: the pipeline's K and Percentile routes equal the
+      // dense references fed through the same tail
+      val h0 = hspec.copy(numCols = Nil)
+      val pairs0 = NeighborJoin.pairs(c, nc, h0)
+      val kk = math.min(3, c0.size)
+      assertSameResult(CocoaPipeline.run(c, nc, h0, MatchStrategy.K(kk)),
+        tail(c, nc, NeighborJoin.topK(pairs0, h0, kk.toDouble), h0),
+        s"pipeline K($kk) c=$c0 nc=$nc0")
+      val radii = Summary.minRadiusByPercentilePerCohort(
+        Summary.nearestDistances(NeighborJoin.topK(pairs0, h0, 1.0), h0), 0.5, h0)
+      assertSameResult(CocoaPipeline.run(c, nc, h0, MatchStrategy.Percentile(0.5)),
+        tail(c, nc, NeighborJoin.withinRadiusPerCohort(pairs0, radii, Nil), h0),
+        s"pipeline Percentile(0.5) c=$c0 nc=$nc0")
     }
     // wildcard tier: a probe sharing NO 2-token subset with any consent row
     // must still get its exact k from the dense tier
@@ -370,10 +424,15 @@ class PropertySpec extends SparkSpec {
             NeighborJoin.pairs(cDf, ncDf, spm), spm, frac, Some(cDf))
           .select("g", "nc_idx", "c_idx", "rank", "dist")
           .collect().map(_.toSeq).toSet
-        val banded = NeighborJoin.topKBandedProportional(cDf, ncDf, spm, frac)
+        val banded = NeighborJoin.topKBanded(cDf, ncDf, spm, frac)
           .select("g", "nc_idx", "c_idx", "rank", "dist")
           .collect().map(_.toSeq).toSet
         assert(banded == dense, s"metric=$m frac=$frac c=$c nc=$nc")
+        // the pipeline's proportional K takes the banded route
+        assertSameResult(CocoaPipeline.run(cDf, ncDf, spm, MatchStrategy.K(frac)),
+          tail(cDf, ncDf, NeighborJoin.topK(
+            NeighborJoin.pairs(cDf, ncDf, spm), spm, frac, Some(cDf)), spm),
+          s"pipeline metric=$m frac=$frac c=$c nc=$nc")
       }
     }
   }
@@ -384,7 +443,7 @@ class PropertySpec extends SparkSpec {
     val frac = 0.5 / (c.size + 1)
     val dense = NeighborJoin.topK(
       NeighborJoin.pairs(encode(c), encode(nc), spec), spec, frac, Some(encode(c)))
-    val banded = NeighborJoin.topKBandedProportional(encode(c), encode(nc), spec, frac)
+    val banded = NeighborJoin.topKBanded(encode(c), encode(nc), spec, frac)
     assert(dense.count() == 0 && banded.count() == 0)
   }
 
@@ -405,6 +464,35 @@ class PropertySpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(!cosPlan.contains("CartesianProduct"), cosPlan.take(2000))
     assert(!cosPlan.contains("BroadcastNestedLoop"), cosPlan.take(2000))
+  }
+
+  test("pipeline kNN routes: one numeric feature never joins all |NC|x|C| pairs") {
+    // rows out of the largest join the executed plans ran, looking through
+    // cached relations (the pipeline persists its selected pairs)
+    object Joins extends AdaptiveSparkPlanHelper {
+      def largest(plan: SparkPlan): Long = (0L +: collectWithSubqueries(plan) {
+        case j: BaseJoinExec => j.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
+        case m: InMemoryTableScanExec => largest(m.relation.cachedPlan)
+      }).max
+    }
+    val (nC, nNc) = (60, 40)
+    val row = (id: Int) => CRow(id.toLong, (id * 7919 % 1000).toDouble, 1.0 + id % 7,
+      Seq("x", "y", "z")(id % 3))
+    val c = encode((0 until nC).map(row).toList).withColumn("b", col("a") * 0.5)
+    val nc = encode((1000 until 1000 + nNc).map(row).toList).withColumn("b", col("a") * 0.5)
+    def largestJoin(sp: CohortSpec, strategy: MatchStrategy): Long = {
+      spark.catalog.clearCache()
+      val res = CocoaPipeline.run(c, nc, sp, strategy)
+      Seq(res.adjusted, res.summary).map { df =>
+        df.collect()
+        Joins.largest(df.queryExecution.executedPlan)
+      }.max
+    }
+    for (strategy <- Seq(MatchStrategy.K(3), MatchStrategy.Percentile(0.5))) {
+      val rows = largestJoin(spec, strategy)
+      assert(rows > 0 && rows < nC * nNc, s"$strategy joined $rows rows")
+    }
+    assert(largestJoin(spec.copy(numCols = Seq("a", "b")), MatchStrategy.K(3)) >= nC * nNc)
   }
 
   test("property: packing invariants hold for arbitrary corpora") {

@@ -78,7 +78,11 @@ class RegistrySpec extends SparkSpec {
       ("Curation", ops.Curation, "curation.scala"),
       ("EventOps", ops.EventOps, "streaming.scala"),
       ("Multimodal", ops.Multimodal, "multimodal.scala"),
-      ("Io", Io, "io.scala"))
+      ("Io", Io, "io.scala"),
+      ("NeighborJoin", NeighborJoin, "knn.scala"),
+      ("Summary", Summary, "summary.scala"),
+      ("Adjust", Adjust, "adjust.scala"),
+      ("CocoaPipeline", CocoaPipeline, "pipeline.scala"))
     val unreachable = for {
       (modName, mod, file) <- modules
       corpus = corpusExcluding(file)
