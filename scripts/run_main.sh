@@ -1,7 +1,7 @@
 #!/bin/bash
 # Dev harness: run any graft main against compiled classes without sbt
 # startup cost. Usage: scripts/run_main.sh <MainClass> [args...]
-# Heap via GRAFT_HEAP (default 48g).
+# Heap via SPARK_DRIVER_MEM (default 8g), as in build.sbt.
 set -e
 if [ $# -eq 0 ]; then
   echo "usage: scripts/run_main.sh <MainClass> [args...]" >&2
@@ -16,7 +16,6 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $ADD_OPENS -Xmx"${GRAFT_HEAP:-48g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+exec java $ADD_OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "graft.$MAIN" "$@"

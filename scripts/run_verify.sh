@@ -1,18 +1,9 @@
 #!/bin/bash
 # Dev harness: run graft.Verify against a testdata dir without sbt startup
-# cost. Usage: scripts/run_verify.sh [sfdir] [outdir]
+# cost. Usage: scripts/run_verify.sh [sfdir] [outdir] [query,filter]
 set -e
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 rm -rf "$OUT"
-exec java $ADD_OPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$SF" "$OUT" ${3:+"$3"}
+exec scripts/run_main.sh Verify "$SF" "$OUT" ${3:+"$3"}

@@ -53,28 +53,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE stays on for skew handling, but partition COALESCING is off:
-      // it sizes post-shuffle stages by map-output BYTES, and the pairs
-      // relations here are tiny compressed yet CPU-expansive (distance
-      // kernel + per-group sort per row) — observed collapsing the window
-      // stages to 3 tasks on 32 cores. shuffle.partitions is already sized
-      // to the machine.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // Typed-Aggregator plans (TopKAggregator) must stay in the object
-      // hash map — the 128-key default silently falls back to sort-based
-      // aggregation, reintroducing exactly the sorter this plan avoids.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.registry()
 
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()

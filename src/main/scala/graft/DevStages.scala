@@ -1,26 +1,24 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** Dev profiler: run ONE SparkEntry query (or x_ probe via BenchOne's map
-  * being unavailable here, any registered query) with per-stage call-site
-  * attribution and per-SQL-execution wall breakdown — locates which
-  * operator of a multi-stage chain carries the task time. Usage:
-  * DevStages <queryName> [sfDir]. One warm rep, then one attributed rep.
+/** Dev profiler: run ONE SparkEntry query or `BenchOne` x_ probe with
+  * per-stage call-site attribution and per-SQL-execution wall breakdown —
+  * locates which operator of a multi-stage chain carries the task time.
+  * Usage: DevStages <name> [sfDir]. One warm rep, then one attributed rep.
   */
 object DevStages {
   def main(args: Array[String]): Unit = {
+    if (args.isEmpty) {
+      System.err.println("Usage: DevStages <name> [sfDir]")
+      sys.exit(2)
+    }
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val queries = SparkEntry.queries ++ BenchOne.probes
+    val fn = queries.getOrElse(name, throw new IllegalArgumentException(
+      s"unknown query '$name'; known: ${queries.keys.toSeq.sorted.mkString(", ")}"))
+    val spark = Sessions.registry()
     case class St(name: String, wall: Double, tasks: Int, taskTime: Double,
                   site: String)
     val done = new java.util.concurrent.CopyOnWriteArrayList[St]()
@@ -68,7 +66,6 @@ object DevStages {
     def noop(df: DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
 
-    val fn = SparkEntry.queries(name)
     // warm rep
     noop(fn(spark, dir))
     spark.catalog.clearCache()

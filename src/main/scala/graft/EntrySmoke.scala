@@ -1,13 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: replicate the driver's entry smoke check (rows > 0). */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.registry()
     val df = SparkEntry.entry(spark)
     println(s"entry rows=${df.count()} cols=${df.columns.length}")
     df.show(3, truncate = false)

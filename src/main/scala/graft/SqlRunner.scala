@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** SQL entry point: run one SQL statement against the testdata tables with
   * graft's native functions registered (activate with
   * `-Dspark.sql.extensions=graft.expr.GraftExtensions`).
@@ -11,14 +9,7 @@ object SqlRunner {
   def main(args: Array[String]): Unit = {
     val sql = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.registry()
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "documents", "embeddings").foreach { t =>
       val p = new java.io.File(s"$sfDir/$t.parquet")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: replicate a testdata dir N× with offset ids to measure how the
@@ -22,19 +22,11 @@ object StressGen {
     val only: Option[Set[String]] = args.lift(3).map(_.split(",").toSet)
     def wanted(n: String): Boolean = only.forall(_.contains(n))
     require(factor >= 1 && factor <= 16, "key remap key*16+i supports factor <= 16")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Historical testdata shipped events.ts as TIMESTAMP(NANOS); this
-      // conf lets that read as BIGINT (a no-op on the current
-      // TIMESTAMP_NTZ micros encoding). Cohorts.events branches on the
-      // actual read schema either way.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Historical testdata shipped events.ts as TIMESTAMP(NANOS); this conf
+    // lets that read as BIGINT (a no-op on the current TIMESTAMP_NTZ micros
+    // encoding). Cohorts.events branches on the actual read schema either way.
+    val spark = Sessions.pipeline(
+      extra = Map("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
 
     def rep(df: DataFrame): DataFrame =
       df.withColumn("__copy", explode(array((0 until factor).map(lit(_)): _*)))

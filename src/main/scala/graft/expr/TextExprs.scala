@@ -376,7 +376,10 @@ case class TokensOf(child: Expression) extends UnaryExpression {
   override def prettyName: String = "tokens_of"
 }
 
-/** char_symbols(string) → array<string>: per-code-point symbols. */
+/** char_symbols(string) → array<string>: per-code-point symbols.
+  * Precondition: non-empty input. Only there does it equal the
+  * `transform(sequence(1, length(w)), i => w.substr(i, 1))` it replaces;
+  * on "" it yields [] where that composition yields ["", ""]. */
 case class CharSymbols(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {

@@ -36,6 +36,31 @@ class RegistrySpec extends SparkSpec {
       s"non-conforming names: ${q.filterNot(_.matches("^q\\d+_[a-z0-9_]+$"))}")
   }
 
+  /** Every Scala source under `src`, comments stripped (ADVICE r13):
+    * block comments go first (Scaladoc is where operator names appear
+    * most), then line comments; string literals stay — oracle SQL
+    * referencing an operator is a real use. */
+  private lazy val allSources: Seq[(java.nio.file.Path, String)] = {
+    def read(p: java.nio.file.Path): String =
+      new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
+    def stripComments(s: String): String =
+      s.replaceAll("(?s)/\\*.*?\\*/", " ").replaceAll("//[^\n]*", " ")
+    Files.walk(Paths.get("src")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).toSeq
+      .map(p => p -> stripComments(read(p)))
+  }
+
+  test("only Sessions builds a SparkSession in src/main") {
+    // One session factory: a main that hand-writes its own builder lets
+    // its conf drift from the one the oracle and the bench plan under.
+    val builders = allSources.collect {
+      case (p, s) if p.startsWith(Paths.get("src", "main")) &&
+        s.contains("SparkSession.builder") => p.getFileName.toString
+    }
+    assert(builders == Seq("Sessions.scala"),
+      s"SparkSession.builder outside Sessions.scala: $builders")
+  }
+
   test("every public operator is referenced outside its own defining file") {
     // Reachability = the operator's name appears in SOME repo source other
     // than the file that defines it (a gate, a harness main, another
@@ -43,22 +68,14 @@ class RegistrySpec extends SparkSpec {
     // surface. Scala reflection (not Java) enumerates the public members,
     // so private[ops]/private[graft] helpers — bytecode-public — don't
     // count as surface.
-    def read(p: java.nio.file.Path): String =
-      new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
-    // Comments are stripped before searching and matches are word-bounded
-    // (ADVICE r13): plain substring matching counted any identifier or
-    // comment CONTAINING the name as a reference, giving the dead-surface
-    // check systematic blind spots for exactly the short names (`tokens`,
-    // `exact`) most likely to go stale. Block comments go first (Scaladoc
-    // is where operator names appear most), then line comments; string
-    // literals stay — oracle SQL referencing an operator is a real use.
-    def stripComments(s: String): String =
-      s.replaceAll("(?s)/\\*.*?\\*/", " ").replaceAll("//[^\n]*", " ")
-    val allSources = (Files.walk(Paths.get("src")).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala")).toSeq)
-      .map(p => p.getFileName.toString -> stripComments(read(p)))
+    // Matches are word-bounded (ADVICE r13): plain substring matching
+    // counted any identifier CONTAINING the name as a reference, giving the
+    // dead-surface check systematic blind spots for exactly the short names
+    // (`tokens`, `exact`) most likely to go stale.
     def corpusExcluding(file: String): String =
-      allSources.collect { case (f, s) if f != file => s }.mkString("\n")
+      allSources.collect {
+        case (p, s) if p.getFileName.toString != file => s
+      }.mkString("\n")
     val mirror = scala.reflect.runtime.universe
       .runtimeMirror(getClass.getClassLoader)
     def publicMembers(mod: AnyRef): Seq[String] =
