@@ -14,10 +14,8 @@ import org.apache.spark.sql.functions._
   *   4. write per-date CSVs: adjustments data + summary (pipeline.py:265-295).
   *
   * All dates are processed in ONE Spark job graph, scoped by the date
-  * column — not the reference's one-date-per-worker loop.
-  *
-  * Usage: graft.RunPipeline <consentParquet> <noconsentParquet> <outDir>
-  *          [k=3 | radius=R | percentile=P] [metric=<sklearn name>] [datesFile]
+  * column — not the reference's one-date-per-worker loop. Arguments: see
+  * `Usage` and [[Trailing]].
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
@@ -33,26 +31,43 @@ object RunPipeline {
     case s => throw new IllegalArgumentException(s"unknown strategy: $s")
   }
 
-  private def isStrategy(s: String): Boolean =
-    s.startsWith("k=") || s.startsWith("radius=") || s.startsWith("percentile=")
+  /** The trailing arguments of both CLIs, taken in any order: at most one
+    * strategy (`k=|radius=|percentile=`, default k=3), at most one
+    * `metric=<sklearn name>` (default manhattan; the reference's config
+    * surface forwards metric strings verbatim, pipeline.py:121-140) and at
+    * most one bare path (the batch CLI's dates file, the streaming CLI's
+    * checkpoint dir). */
+  private[graft] final case class Trailing(strategy: MatchStrategy,
+                                           metric: DistanceMetric, path: Option[String])
 
-  /** Guard shared with [[RunPipelineStream]]: a trailing arg that LOOKS like
-    * a key=value flag but matches no known key (a typo like `metrc=cosine`
-    * or `Metric=l2`) would otherwise be silently taken as the positional
-    * dates-file / checkpoint path — fail fast with a usage message instead. */
-  private[graft] def rejectUnknownKeyArgs(trailing: Seq[String]): Unit = {
-    val known = Set("k", "radius", "percentile", "metric")
-    trailing.foreach { a =>
-      val eq = a.indexOf('=')
-      if (eq > 0) {
-        val key = a.substring(0, eq)
-        require(known.contains(key),
-          s"unrecognized option '$a' — supported keys: " +
-            "k=|radius=|percentile=|metric= (keys are lowercase); " +
-            "a bare trailing arg is the dates-file / checkpoint path")
-      }
+  /** Splits `args` into its `positional` leading arguments and the
+    * [[Trailing]] ones. A missing leading argument, a repeated kind of
+    * trailing argument, or a `key=` no CLI knows (a typo like `metrc=cosine`
+    * or `Metric=l2` would otherwise be taken as the path) fails with
+    * `usage`. */
+  private[graft] def parseArgs(args: Array[String], positional: Int,
+                               usage: String): (Array[String], Trailing) = {
+    def fail(why: String): Nothing = throw new IllegalArgumentException(s"$why\n$usage")
+    if (args.length < positional) fail(s"expected $positional leading arguments")
+    val byKind = args.drop(positional).toSeq.groupBy(a => a.split("=", 2) match {
+      case Array(_) | Array("", _) => "path"
+      case Array("k" | "radius" | "percentile", _) => "strategy"
+      case Array("metric", _) => "metric"
+      case _ => fail(s"unrecognized option '$a' — supported keys: " +
+        "k=|radius=|percentile=|metric= (keys are lowercase)")
+    })
+    byKind.find(_._2.size > 1).foreach { case (kind, as) =>
+      fail(s"more than one $kind: ${as.mkString(" ")}")
     }
+    def one(kind: String): Option[String] = byKind.get(kind).map(_.head)
+    (args.take(positional), Trailing(parseStrategy(one("strategy").getOrElse("k=3")),
+      one("metric").fold[DistanceMetric](Manhattan)(m =>
+        DistanceMetric.parse(m.stripPrefix("metric="))),
+      one("path")))
   }
+
+  private val Usage = "Usage: graft.RunPipeline <consentParquet> <noconsentParquet> " +
+    "<outDir> [k=3 | radius=R | percentile=P] [metric=<sklearn name>] [datesFile]"
 
   /** The CLI's fixed column roles — ONE definition shared by the date-scope
     * computation and the adjustment job. */
@@ -62,34 +77,22 @@ object RunPipeline {
     dateCol = "conversion_date",
     cohortCols = Seq("conversion_date"))
 
-  /** Session-agnostic body (tests drive this with their own session).
-    * Trailing args are recognized by prefix, any order: a strategy
-    * (`k=|radius=|percentile=`), a `metric=<sklearn name>` (the reference's
-    * config surface forwards metric strings verbatim, pipeline.py:121-140),
-    * and anything else is the dates file path. */
+  /** Session-agnostic body (tests drive this with their own session). */
   def run(spark: SparkSession, args: Array[String]): Unit = {
-    val Array(consentPath, noconsentPath, outDir) = args.take(3)
-    val trailing = args.drop(3)
-    rejectUnknownKeyArgs(trailing.toSeq)
-    val strategy = parseStrategy(trailing.find(isStrategy).getOrElse("k=3"))
-    val metric = trailing.find(_.startsWith("metric="))
-      .map(s => DistanceMetric.parse(s.stripPrefix("metric="))).getOrElse(Manhattan)
-    val datesFile = trailing.filterNot(a => isStrategy(a) || a.startsWith("metric="))
-      .headOption
-    val cfg = cliConfig
-
+    val (Array(consentPath, noconsentPath, outDir), trailing) = parseArgs(args, 3, Usage)
     val noconsentRaw = spark.read.parquet(noconsentPath)
 
     // Date scope: explicit dates file, else a 1-day lookback from the
     // noconsent table's max date (cloud_function/main.py:34,103-121).
-    val dates: Seq[String] = datesFile match {
+    val dates: Seq[String] = trailing.path match {
       case Some(f) => Io.readDatesFile(spark, f).collect().map(_.toString).toSeq
       case None =>
         val maxD = noconsentRaw
-          .agg(date_format(max(col(cfg.dateCol)), "yyyy-MM-dd")).first().getString(0)
+          .agg(date_format(max(col(cliConfig.dateCol)), "yyyy-MM-dd")).first().getString(0)
         Seq(maxD)
     }
-    runForDates(spark, consentPath, noconsentPath, outDir, strategy, dates, metric)
+    runForDates(spark, consentPath, noconsentPath, outDir, trailing.strategy, dates,
+      trailing.metric)
   }
 
   /** One adjustment job over an explicit date scope — shared by the batch
@@ -119,11 +122,9 @@ object RunPipeline {
 
     // Row identity must cover ALL idCols: the reference keys rows by
     // positional index precisely because id_columns = [gclid, timestamp] are
-    // only unique together (gclid repeats). A repeating id would silently
-    // merge softmax groups (breaking Σ shares == value) and fan out the
-    // re-attach left join (breaking |output| == |consent|), so build one
-    // composite id and hard-check uniqueness per cohort like the
-    // reference's positional index guarantees.
+    // only unique together (gclid repeats). So build one composite id; the
+    // matcher checks it is unique per date, like the reference's positional
+    // index guarantees, and its message shows the repeating id.
     // JSON-struct encoding, not concat_ws: concat_ws silently DROPS null
     // arguments, so distinct tuples like (a, NULL) and (NULL, a) would
     // collide (and a separator char inside a value would shift the split),
@@ -133,15 +134,6 @@ object RunPipeline {
     val addId = (df: org.apache.spark.sql.DataFrame) =>
       df.withColumn(rowIdCol, to_json(struct(cfg.idCols.map(col(_)): _*)))
     val (nc, c) = (addId(nc0), addId(c0))
-    def requireUniqueIds(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val keys = (cfg.cohortCols :+ rowIdCol).map(col(_))
-      val dup = df.groupBy(keys: _*).count().filter(col("count") > 1).limit(1).count()
-      require(dup == 0,
-        s"id columns ${cfg.idCols.mkString("(", ",", ")")} are not unique " +
-          s"within the $name cohort — rows would merge/duplicate in the adjustment")
-    }
-    requireUniqueIds(c, "consent")
-    requireUniqueIds(nc, "noconsent")
 
     val spec = CohortSpec(
       idCol = rowIdCol, valueCol = cfg.conversionCol,

@@ -19,9 +19,7 @@ import org.apache.spark.sql.streaming.Trigger
   *    restarts: a re-launched job skips files already committed — the
   *    idempotence the reference delegates to Cloud Function retries.
   *
-  * Usage: graft.RunPipelineStream <consentParquet> <noconsentParquet>
-  *          <outDir> <datesDir> [k=3 | radius=R | percentile=P]
-  *          [metric=<sklearn name>] [checkpointDir]
+  * Arguments: see `Usage` and [[RunPipeline.Trailing]].
   */
 object RunPipelineStream {
   def main(args: Array[String]): Unit = {
@@ -29,21 +27,16 @@ object RunPipelineStream {
     try run(spark, args) finally spark.stop()
   }
 
-  /** Session-agnostic body (tests drive this with their own session).
-    * Trailing args by prefix like the batch CLI: strategy, `metric=…`,
-    * anything else is the checkpoint dir. */
+  private val Usage = "Usage: graft.RunPipelineStream <consentParquet> " +
+    "<noconsentParquet> <outDir> <datesDir> [k=3 | radius=R | percentile=P] " +
+    "[metric=<sklearn name>] [checkpointDir]"
+
+  /** Session-agnostic body (tests drive this with their own session). The
+    * bare trailing path is the checkpoint dir. */
   def run(spark: SparkSession, args: Array[String]): Unit = {
-    val Array(consentPath, noconsentPath, outDir, datesDir) = args.take(4)
-    val trailing = args.drop(4)
-    RunPipeline.rejectUnknownKeyArgs(trailing.toSeq)
-    def isStrategy(s: String) = s.startsWith("k=") ||
-      s.startsWith("radius=") || s.startsWith("percentile=")
-    val strategy = RunPipeline.parseStrategy(trailing.find(isStrategy).getOrElse("k=3"))
-    val metric = trailing.find(_.startsWith("metric="))
-      .map(s => DistanceMetric.parse(s.stripPrefix("metric="))).getOrElse(Manhattan)
-    val checkpoint = trailing
-      .filterNot(a => isStrategy(a) || a.startsWith("metric="))
-      .headOption.getOrElse(s"$outDir/__checkpoint")
+    val (Array(consentPath, noconsentPath, outDir, datesDir),
+      RunPipeline.Trailing(strategy, metric, path)) = RunPipeline.parseArgs(args, 4, Usage)
+    val checkpoint = path.getOrElse(s"$outDir/__checkpoint")
 
     // successive batches append NEW date partitions into one output dir;
     // static overwrite would drop every partition a batch didn't write —

@@ -254,8 +254,9 @@ case object HammingAuto extends DistanceMetric {
   * difference to the numerator and size(a)+size(b) to the denominator;
   * numerics |Δx| and |x+y| (abs matters — acctbal can be negative). Two
   * all-zero rows are defined as distance 0 (scipy returns NaN; a NaN
-  * would sort over real neighbors — see checkFeatures). The denominator is
-  * pair-dependent, so no prune inequality exists — dense fallback. */
+  * would sort over real neighbors — see [[NearestCustomerMatcher]]'s
+  * feature check). The denominator is pair-dependent, so no prune
+  * inequality exists — dense fallback. */
 case object BrayCurtis extends DistanceMetric {
   val name = "braycurtis"
   def dist(a: Column, b: Column, num: Seq[(Column, Column)]): Column = {
@@ -313,7 +314,7 @@ case object SqEuclidean extends DistanceMetric {
   * Token part: symDiff / |a ∪ b|-ish, folded with the numeric columns
   * (x ≠ y is a disagreement — two unequal nonzeros disagree; x = y = 0 is
   * unsupported and counts nowhere). Two all-zero rows ≡ distance 0 (scipy
-  * NaN — same checkFeatures rationale as Bray–Curtis). Pair-dependent
+  * NaN — same rationale as Bray–Curtis). Pair-dependent
   * denominator → dense fallback everywhere. */
 case object Jaccard extends DistanceMetric {
   val name = "jaccard"
@@ -373,7 +374,6 @@ object MatchStrategy {
   * @param conversionCol strictly-positive conversion value column
   * @param dateCol       day-grain processing-date column
   * @param dropCols      columns removed before feature encoding
-  * @param nonDummyCols  numeric passthrough features (not one-hot encoded)
   * @param cohortCols    grouping columns scoping the match (per-date cohort
   *                      in the reference; empty = one global cohort)
   * @param cleanFn       extra cleaning hook applied after the built-in
@@ -390,7 +390,6 @@ final case class JobConfig(
     conversionCol: String,
     dateCol: String = "",
     dropCols: Seq[String] = Nil,
-    nonDummyCols: Seq[String] = Nil,
     cohortCols: Seq[String] = Nil,
     metric: DistanceMetric = Manhattan,
     cleanFn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity,

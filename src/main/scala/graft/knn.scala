@@ -67,14 +67,11 @@ object NeighborJoin {
     *    side is explicitly repartitioned on its unique row id first, because
     *    a small parquet input arrives as ONE partition and would serialize
     *    the whole |NC|×|C| expansion onto one core.
-    *  - otherwise a shuffle equi-join on the cohort keys. Cohort keys are
-    *    low-cardinality (dates), so `salt > 1` appends `nc_idx mod salt` to
-    *    the join key (consent side exploded ×salt) — parallelism becomes
-    *    cohorts × salt instead of cohorts. This is the plan shape that
-    *    scales to a 1000-executor cluster on skewed per-date cohorts.
+    *  - otherwise a shuffle equi-join on the cohort keys (a cross join when
+    *    there are none).
     */
   def pairs(consent: DataFrame, noconsent: DataFrame, spec: CohortSpec,
-            broadcastConsent: Boolean = false, salt: Int = 1): DataFrame = {
+            broadcastConsent: Boolean = false): DataFrame = {
     val c0 = prefixed(consent, spec, "c_")
     val nc0 = prefixed(noconsent, spec, "nc_")
     val joined =
@@ -84,14 +81,8 @@ object NeighborJoin {
         // serializing the whole pair expansion onto one core.
         val n = nc0.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
         joinCoh(nc0.repartition(n, col("nc_idx")), c0, spec.cohortCols)
-      } else if (salt > 1) {
-        val ncS = nc0.withColumn("__salt", pmod(col("nc_idx"), lit(salt)).cast("int"))
-        val cS = c0.withColumn("__salt", explode(array((0 until salt).map(lit(_)): _*)))
-        ncS.join(cS, spec.cohortCols :+ "__salt").drop("__salt")
-      } else {
-        if (spec.cohortCols.nonEmpty) nc0.join(c0, spec.cohortCols)
-        else nc0.crossJoin(c0)
-      }
+      } else if (spec.cohortCols.nonEmpty) nc0.join(c0, spec.cohortCols)
+      else nc0.crossJoin(c0)
     joined.withColumn("dist", distCol(spec)).drop(featureCols(spec): _*)
   }
 

@@ -11,9 +11,14 @@ import org.apache.spark.sql.functions._
   * :470-524 `get_adjustments_and_summary_calculations`).
   *
   * Both cohorts must already share the encoded feature space
-  * ([[CocoaPipeline.prepare]]); the constructor enforces the reference's
-  * hard checks — identical feature columns (:266-284) and strictly-positive
-  * non-null conversions (:79-82).
+  * ([[CocoaPipeline.prepare]]). The matcher is the one place the job's data
+  * contract is checked, in one aggregate pass per cohort side (one Spark
+  * action): `spec.idCol` unique within each cohort of `spec.cohortCols`, no
+  * null/NaN feature, and — consent only, like the reference (:79-82) —
+  * strictly-positive non-null conversions. The consent pass runs at
+  * construction and keeps the per-cohort row counts that bound `k`; the
+  * noconsent pass runs on each call, next to the reference's identical
+  * feature columns check (:266-284).
   *
   * @param consent cleaned, encoded consenting cohort
   * @param spec    column roles + metric + cohort scope
@@ -24,44 +29,69 @@ final class NearestCustomerMatcher(consent: DataFrame, spec: CohortSpec,
     consent.columns.contains(spec.valueCol) &&
     consent.columns.contains(spec.tokenCol),
     s"consent cohort must carry ${spec.idCol}/${spec.valueCol}/${spec.tokenCol}")
-  // The conversion column must not contain NaNs/nulls or values <= 0
-  // (reference raises ValueError at construction, :79-82).
-  require(consent.filter(col(spec.valueCol).isNull ||
-      col(spec.valueCol) <= 0 || isnan(col(spec.valueCol))).limit(1).count() == 0,
-    "The conversion values must be larger than zero.")
 
-  private def checkColumns(noconsent: DataFrame): Unit =
-    require(consent.columns.sorted.sameElements(noconsent.columns.sorted),
-      "Consented and non-consented data must have same columns.")
-
-  /** Null/NaN feature values would make every pair distance null, and null
-    * distances sort FIRST under Spark's ASC ordering — they would silently
-    * fill the top-k and route conversion value into null-weighted shares.
-    * sklearn raises on NaN input (the reference inherits that); so do we.
-    * Token nulls are covered too: a null token array yields null distance.
+  /** One `groupBy(cohort…, id)` → `groupBy(cohort…)` pass over one side,
+    * after the reference's identical-columns check (trivial on the consent
+    * side); fails on the first cohort that breaks the contract and returns
+    * every cohort's row count.
+    *
+    *  - A repeating id would merge softmax groups (breaking Σ shares ==
+    *    value) and fan out the re-attach join (breaking |output| ==
+    *    |consent|); the message shows one repeating id.
+    *  - Null/NaN feature values would make every pair distance null, and
+    *    null distances sort FIRST under Spark's ASC ordering — they would
+    *    silently fill the top-k and route conversion value into
+    *    null-weighted shares. sklearn raises on NaN input (the reference
+    *    inherits that); so do we. A null token array yields a null distance
+    *    too.
+    *  - consent side only: the conversion column must not contain
+    *    NaNs/nulls or values <= 0 (the reference raises at construction,
+    *    :79-82).
     */
-  private def checkFeatures(df: DataFrame, name: String): Unit = {
-    val nullable = spec.numCols.map(c => col(c).isNull || isnan(col(c))) :+
-      col(spec.tokenCol).isNull
-    require(df.filter(nullable.reduce(_ || _)).limit(1).count() == 0,
-      s"$name cohort contains null/NaN feature values — distances would be " +
-        "null and silently outrank real neighbors")
+  private def checkCohorts(df: DataFrame, consentSide: Boolean): Seq[Long] = {
+    require(consent.columns.sorted.sameElements(df.columns.sorted),
+      "Consented and non-consented data must have same columns.")
+    val name = if (consentSide) "consent" else "noconsent"
+    val coh = spec.cohortCols.map(col(_))
+    val v = col(spec.valueCol)
+    val badFeature = (spec.numCols.map(c => col(c).isNull || isnan(col(c))) :+
+      col(spec.tokenCol).isNull).reduce(_ || _)
+    val perCohort = df
+      .groupBy(coh :+ col(spec.idCol): _*)
+      .agg(count(lit(1)).as("__n"), max(badFeature).as("__f"),
+        max(v.isNull || v <= 0 || isnan(v)).as("__v"))
+      .groupBy(coh: _*)
+      .agg(sum(col("__n")).as("__n"),
+        max(when(col("__n") > 1,
+          coalesce(col(spec.idCol).cast("string"), lit("null")))).as("__dup"),
+        max(col("__f")).as("__f"), max(col("__v")).as("__v"))
+      .where(col("__n").isNotNull) // no cohort keys and no rows: one all-null row
+      .collect()
+    perCohort.map { r =>
+      val where = spec.cohortCols.map(c => s"$c=${r.getAs[Any](c)}")
+        .mkString(" (", ", ", ")")
+      val dup = r.getAs[String]("__dup")
+      require(dup == null,
+        s"ids in ${spec.idCol} are not unique within the $name cohort$where: " +
+          s"$dup repeats — rows would merge/duplicate in the adjustment")
+      require(!r.getAs[Boolean]("__f"),
+        s"$name cohort$where contains null/NaN feature values — distances " +
+          "would be null and silently outrank real neighbors")
+      require(!consentSide || !r.getAs[Boolean]("__v"),
+        "The conversion values must be larger than zero.")
+      r.getAs[Long]("__n")
+    }.toSeq
   }
-  checkFeatures(consent, "consent")
+
+  private val consentCounts = checkCohorts(consent, consentSide = true)
 
   /** sklearn raises when `n_neighbors > n_samples_fit` (pinned by reference
     * test cocoa/nearest_consented_customers_test.py:62-69); and a
     * proportional k resolving to `floor(k·|C|) == 0` would silently match
-    * nothing (ADVICE r01). Both become construction-time errors here,
-    * checked against the SMALLEST cohort so every cohort can satisfy k. */
+    * nothing (ADVICE r01). Both become errors here, checked against the
+    * SMALLEST consent cohort so every cohort can satisfy k. */
   private def validateK(k: Double): Unit = {
-    // an empty consent cohort yields a NULL min (zero groups) — surface it
-    // as the same validation error, not an NPE
-    val minCohort = Option(consent
-      .groupBy(spec.cohortCols.map(col(_)): _*)
-      .agg(count(lit(1)).as("__n"))
-      .agg(min(col("__n"))).first().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
+    val minCohort = if (consentCounts.isEmpty) 0L else consentCounts.min
     require(minCohort > 0, "consent cohort is empty — nothing to fit")
     if (k >= 1)
       require(k.toInt <= minCohort,
@@ -92,8 +122,7 @@ final class NearestCustomerMatcher(consent: DataFrame, spec: CohortSpec,
     * Spark twin of get_adjustments_and_summary_calculations. */
   def adjustmentsAndSummary(noconsent: DataFrame,
                             strategy: MatchStrategy): AdjustmentResult = {
-    checkColumns(noconsent)
-    checkFeatures(noconsent, "noconsent")
+    checkCohorts(noconsent, consentSide = false)
     strategy match {
       case MatchStrategy.K(k) => validateK(k)
       case _                  => ()
@@ -110,10 +139,9 @@ final class NearestCustomerMatcher(consent: DataFrame, spec: CohortSpec,
   /** Radius for the percentile strategy from a k=1 pass
     * (min_radius_by_percentile, reference :140-143). */
   def minRadiusByPercentile(noconsent: DataFrame, percentile: Double): Double = {
-    checkColumns(noconsent)
     // same hazard as adjustmentsAndSummary: a null/NaN feature makes the
     // k=1 distances null, which sort FIRST and silently corrupt the radius
-    checkFeatures(noconsent, "noconsent")
+    checkCohorts(noconsent, consentSide = false)
     val rspec = resolveSpec(noconsent)
     // the same k=1 pass as the pipeline's percentile strategy
     Summary.minRadiusByPercentile(Summary.nearestDistances(

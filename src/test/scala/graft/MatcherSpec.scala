@@ -34,6 +34,40 @@ class MatcherSpec extends SparkSpec {
       matcher.calculateAdjustedConversions(badNc, MatchStrategy.K(1)))
   }
 
+  test("matcher rejects an id repeated within a cohort, not across cohorts") {
+    val byDay = sp.copy(cohortCols = Seq("day"))
+    def cohort(rows: (String, Double, String)*) =
+      rows.toDF("gclid", "conversion_value", "day")
+        .withColumn("features", Preprocess.tokenFeatures(Seq("day")))
+    val e = intercept[IllegalArgumentException](
+      new NearestCustomerMatcher(cohort(("1", 10.0, "d1"), ("1", 5.0, "d1")), byDay))
+    assert(e.getMessage.contains("not unique within the consent cohort (day=d1)"), e)
+    // the same id on two days is two rows, one per cohort
+    val matcher = new NearestCustomerMatcher(
+      cohort(("1", 10.0, "d1"), ("1", 5.0, "d2")), byDay)
+    intercept[IllegalArgumentException](matcher.calculateAdjustedConversions(
+      cohort(("10", 20.0, "d2"), ("10", 8.0, "d2")), MatchStrategy.K(1)))
+    val adjusted = matcher.calculateAdjustedConversions(
+      cohort(("10", 20.0, "d1"), ("10", 8.0, "d2")), MatchStrategy.K(1))
+      .select("day", "adjusted_conversion").as[(String, Double)].collect().toMap
+    assert(adjusted == Map("d1" -> 20.0, "d2" -> 8.0))
+  }
+
+  test("CLIs take at most one strategy, metric and path, and every leading arg") {
+    for (extra <- Seq(Seq("k=3", "radius=1.0"), Seq("percentile=0.5", "k=2"),
+        Seq("metric=l1", "metric=l2"), Seq("k=1", "dates.txt", "more.txt"))) {
+      val batch = intercept[IllegalArgumentException](
+        RunPipeline.run(spark, Array("consent", "noconsent", "out") ++ extra))
+      assert(batch.getMessage.contains("Usage: graft.RunPipeline "), extra)
+      val stream = intercept[IllegalArgumentException](
+        RunPipelineStream.run(spark, Array("consent", "noconsent", "out", "dates") ++ extra))
+      assert(stream.getMessage.contains("Usage: graft.RunPipelineStream "), extra)
+    }
+    assert(intercept[IllegalArgumentException](
+      RunPipeline.run(spark, Array("consent", "noconsent")))
+      .getMessage.contains("Usage: graft.RunPipeline "))
+  }
+
   test("RunPipeline keys rows by ALL idCols: repeated gclids stay distinct") {
     val dir = Files.createTempDirectory("graft-dup-gclid").toString
     // gclid '1' appears twice (distinct timestamps) — the reference handles
@@ -76,8 +110,11 @@ class MatcherSpec extends SparkSpec {
       .withColumn("conversion_date", to_date(col("conversion_date")))
     dup.write.parquet(s"$dir/consent")
     dup.write.parquet(s"$dir/noconsent")
-    assertThrows[IllegalArgumentException](
+    val e = intercept[IllegalArgumentException](
       RunPipeline.run(spark, Array(s"$dir/consent", s"$dir/noconsent", s"$dir/out", "k=1")))
+    // the CLI user sees the id columns, not only the composite __row_id
+    assert(e.getMessage.contains("gclid") &&
+      e.getMessage.contains("conversion_timestamp"), e.getMessage)
   }
 
   test("RunPipeline end-to-end: parquet cohorts -> per-date CSV adjustments") {

@@ -70,12 +70,14 @@ class PreprocessSpec extends SparkSpec {
     val noconsent = Seq((3L, 7.0, "x", 2.0)).toDF("id", "conv", "cat", "extra")
     val cfg = JobConfig(
       idCols = Seq("id"), conversionCol = "conv",
+      dropCols = Seq("extra"), // dropped after cleaning, before encoding
       cleanFn = df => df.filter(col("extra") < 50), // custom cleaning rule
       featureFn = df => df.withColumn("cat2", concat(col("cat"), lit("!"))))
     val (nc, c) = CocoaPipeline.prepare(noconsent, consent, cfg, Seq("cat", "cat2"))
     assert(c.count() == 1) // consent row with extra=99 cleaned away
     val toks = nc.select("features").as[Seq[String]].head()
     assert(toks.contains("cat2=x!")) // engineered feature entered the space
+    assert(!nc.columns.contains("extra") && !c.columns.contains("extra"))
   }
 
   test("row ids are dense, deterministic, zero-based") {

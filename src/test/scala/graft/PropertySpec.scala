@@ -1069,19 +1069,4 @@ class PropertySpec extends SparkSpec {
       assert(got == ref, s"trial $trial")
     }
   }
-
-  test("salted pairs relation equals the plain equi-join pairs relation") {
-    val c = encode(List(CRow(1, 1.0, 5.0, "x"), CRow(2, 2.0, 6.0, "y"),
-      CRow(3, 3.0, 7.0, "x"), CRow(4, 4.0, 8.0, "z")))
-      .withColumn("month", lit("m1"))
-    val nc = encode(List(CRow(100, 1.5, 9.0, "x"), CRow(101, 2.5, 4.0, "z")))
-      .withColumn("month", lit("m1"))
-    val sp = spec.copy(cohortCols = Seq("month"))
-    val plain = NeighborJoin.pairs(c, nc, sp)
-      .select("nc_idx", "c_idx", "dist").collect().map(_.toSeq).toSet
-    val salted = NeighborJoin.pairs(c, nc, sp, salt = 3)
-      .select("nc_idx", "c_idx", "dist").collect().map(_.toSeq).toSet
-    assert(plain == salted)
-    assert(plain.size == 8)
-  }
 }
