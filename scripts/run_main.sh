@@ -5,7 +5,7 @@
 set -e
 if [ $# -eq 0 ]; then
   echo "usage: scripts/run_main.sh <MainClass> [args...]" >&2
-  echo "  e.g. scripts/run_main.sh BenchOne q153_release_gen2" >&2
+  echo "  e.g. scripts/run_main.sh DevStages q153_release_gen2" >&2
   exit 2
 fi
 cd "$(dirname "$0")/.."

@@ -2,10 +2,11 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Dev profiler: run ONE SparkEntry query or `BenchOne` x_ probe with
-  * per-stage call-site attribution and per-SQL-execution wall breakdown —
-  * locates which operator of a multi-stage chain carries the task time.
-  * Usage: DevStages <name> [sfDir]. One warm rep, then one attributed rep.
+/** Dev profiler: run ONE SparkEntry query with per-stage call-site
+  * attribution and per-SQL-execution wall breakdown — locates which
+  * operator of a multi-stage chain carries the task time.
+  * Usage: DevStages <name> [sfDir]. One warm rep, which prints the
+  * formatted physical plan, then one attributed rep.
   */
 object DevStages {
   def main(args: Array[String]): Unit = {
@@ -15,7 +16,7 @@ object DevStages {
     }
     val name = args(0)
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val queries = SparkEntry.queries ++ BenchOne.probes
+    val queries = SparkEntry.queries
     val fn = queries.getOrElse(name, throw new IllegalArgumentException(
       s"unknown query '$name'; known: ${queries.keys.toSeq.sorted.mkString(", ")}"))
     val spark = Sessions.registry()
@@ -67,7 +68,9 @@ object DevStages {
       df.write.format("noop").mode("overwrite").save()
 
     // warm rep
-    noop(fn(spark, dir))
+    val warm = fn(spark, dir)
+    warm.explain("formatted")
+    noop(warm)
     spark.catalog.clearCache()
     done.clear()
     execDone.clear()

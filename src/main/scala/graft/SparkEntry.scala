@@ -1848,7 +1848,7 @@ object SparkEntry {
     // Identical vectors share every SRP band (admission prob. 1, fixed
     // seed) and hub-verify at sim = 1.0 exactly, so the star clusters equal
     // the exact recursive-closure clusters — a FULL hash gate, not
-    // rows-only, exercising srpChunks → hub window → exact verify →
+    // rows-only, exercising chunksOfSigs → hub window → exact verify →
     // connected components end-to-end. Diffuse-threshold recall (0.4-ish)
     // stays characterized by OpsSpec's contract pins, not a hash oracle —
     // SRP admission there is genuinely probabilistic.

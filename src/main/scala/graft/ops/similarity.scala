@@ -604,21 +604,6 @@ object Similarity {
       .select(col("id"), col("bc.band").as("band"), col("bc.chunk").as("chunk"))
   }
 
-  /** (id, band, chunk) sign-random-projection band buckets shared by the
-    * LSH pair and cluster operators. */
-  private def srpChunks(corpus: DataFrame, bands: Int, seed: Long): DataFrame =
-    chunksOfSigs(srpSigs(corpus, seed), bands)
-
-  /** Exact cosine over candidate (a_id, b_id) pairs. */
-  private def verifyCosine(candidates: DataFrame, corpus: DataFrame,
-                           threshold: Double): DataFrame =
-    candidates
-      .join(prep(corpus, "a_"), "a_id")
-      .join(prep(corpus, "b_"), "b_id")
-      .withColumn("sim", dotD(col("a_emb"), col("b_emb")) / (col("a_norm") * col("b_norm")))
-      .filter(col("sim") >= threshold)
-      .select(col("a_id"), col("b_id"), graft.Num.rnd(col("sim"), 6).as("sim"))
-
   /** Embedding near-dup CLUSTERS without pair enumeration — the cosine twin
     * of [[graft.ops.Dedup.clustersLsh]]: one exact-verified edge per
     * (band, bucket) member to the bucket's min-id hub (window aggregate),

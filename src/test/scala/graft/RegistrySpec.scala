@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
   * 140 queries and 85+ operators, these assertions keep the registry
   * honest — no gate without an oracle beyond the documented
   * generated-at-verify-time set, and no public operator that nothing
-  * (gate, replica probe, or spec) reaches.
+  * (gate, main, or spec) reaches.
   */
 class RegistrySpec extends SparkSpec {
 
@@ -59,6 +59,26 @@ class RegistrySpec extends SparkSpec {
     }
     assert(builders == Seq("Sessions.scala"),
       s"SparkSession.builder outside Sessions.scala: $builders")
+  }
+
+  test("only the CLIs, the driver's mains, DevStages and StressGen declare a main") {
+    // A/B work runs through DevStages under the registry conf; a new
+    // throwaway main would grow its own probes, knobs and fixtures again.
+    val mains = allSources.collect {
+      case (p, s) if p.startsWith(Paths.get("src", "main")) &&
+        s.contains("def main(") => p.getFileName.toString.stripSuffix(".scala")
+    }.sorted
+    assert(mains == Seq("Bench", "DevStages", "RunPipeline",
+      "RunPipelineStream", "StressGen", "Verify"),
+      s"files in src/main declaring a main: $mains")
+  }
+
+  test("SparkEntry.entry returns one adjusted row per consent row") {
+    // The driver's smoke hook: it checks only rows > 0, so pin the count.
+    val consent = Cohorts.cohorts(spark, "/root/testdata/sf0.001")._1.count()
+    val rows = SparkEntry.entry(spark).count()
+    assert(rows > 0 && rows == consent,
+      s"entry rows $rows, consent rows $consent")
   }
 
   test("every public operator is referenced outside its own defining file") {
