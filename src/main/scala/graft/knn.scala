@@ -375,9 +375,8 @@ object NeighborJoin {
     * Global cohort scope (`cohortCols == Nil`) is also scale-safe: a bare
     * window there would funnel all |C|+|NC| rows through ONE sort task, so
     * the rank / position passes switch to the range-partitioned
-    * zipWithIndex shape ([[Preprocess.withRowIdsDistributed]] /
-    * [[Preprocess.withRunningFlagCount]] — per-partition offsets from a
-    * tiny count job, no single-task stage). Same rows, pinned by the
+    * zipWithIndex shape ([[Preprocess.runningSum]] — per-partition offsets
+    * from a tiny sums job, no single-task stage). Same rows, pinned by the
     * PropertySpec equivalences, which all run with `cohortCols = Nil`.
     *
     * A NULL/NaN numeric feature is invalid input (sklearn raises; the
@@ -419,10 +418,9 @@ object NeighborJoin {
     * internal persist in this engine.
     *
     * With NO cohort scope a bare window would funnel all rows through one
-    * task, so the global forms switch to the range-partitioned zipWithIndex
-    * / running-count shapes ([[Preprocess.withRowIdsDistributed]] /
-    * [[Preprocess.withRunningFlagCount]] — per-partition offsets from a
-    * tiny count job, no single-task stage). */
+    * task, so the global forms switch to the range-partitioned
+    * running-sum shape ([[Preprocess.runningSum]] — per-partition offsets
+    * from a tiny sums job, no single-task stage). */
   private final case class BandPrep(c0: DataFrame, nc0: DataFrame,
                                     cRanked: DataFrame, cStats: DataFrame,
                                     pos: DataFrame)
@@ -448,16 +446,14 @@ object NeighborJoin {
     val nc0 = guardX("nc_", prefixed(noconsent, spec, "nc_")
       .persist(StorageLevel.MEMORY_AND_DISK))
 
-    // consent rows ranked by x within each cohort (0-based zipWithIndex in
-    // the global form, hence the +1)
+    // consent rows ranked (1-based) by x within each cohort
     val cRanked =
       if (coh.nonEmpty) {
         val wRank = Window.partitionBy(coh.map(col(_)): _*)
           .orderBy(col(s"c_$x").asc, col("c_idx").asc)
         c0.withColumn("__rn", row_number().over(wRank).cast("long"))
       } else
-        Preprocess.withRowIdsDistributed(c0, Seq(s"c_$x", "c_idx"), "__rn")
-          .withColumn("__rn", col("__rn") + lit(1L))
+        Preprocess.runningSum(c0, Nil, Seq(s"c_$x", "c_idx"), _ => 1L, "__rn")
     val cStats = c0.groupBy(coh.map(col(_)): _*)
       .agg(count(lit(1)).as("__cnt"), max(size(col("c_features"))).as("__cmaxtok"),
         min(size(col("c_features"))).as("__cmintok"))

@@ -137,11 +137,18 @@ final class NearestCustomerMatcher(consent: DataFrame, spec: CohortSpec,
     adjustmentsAndSummary(noconsent, strategy).adjusted
 
   /** Radius for the percentile strategy from a k=1 pass
-    * (min_radius_by_percentile, reference :140-143). */
+    * (min_radius_by_percentile, reference :140-143). One scalar, so the
+    * noconsent side must hold at most one cohort: the pipeline takes the
+    * quantile per cohort (the reference derives it per date), and a value
+    * pooled over several cohorts is a radius the job never uses. */
   def minRadiusByPercentile(noconsent: DataFrame, percentile: Double): Double = {
     // same hazard as adjustmentsAndSummary: a null/NaN feature makes the
     // k=1 distances null, which sort FIRST and silently corrupt the radius
-    checkCohorts(noconsent, consentSide = false)
+    val cohorts = checkCohorts(noconsent, consentSide = false).size
+    require(cohorts <= 1,
+      s"minRadiusByPercentile returns one radius, but the noconsent side has " +
+        s"$cohorts cohorts of ${spec.cohortCols.mkString(", ")}; use " +
+        "Summary.minRadiusByPercentilePerCohort for the per-cohort radii")
     val rspec = resolveSpec(noconsent)
     // the same k=1 pass as the pipeline's percentile strategy
     Summary.minRadiusByPercentile(Summary.nearestDistances(

@@ -142,9 +142,10 @@ object Sampling {
     * excluded.
     *
     * Scale shape: the global running sum is
-    * [[graft.Preprocess.withRunningSum]] — range-partition on the rank
-    * key, per-partition sums, broadcast offsets, streaming pass — never
-    * `sum().over(Window.orderBy(…))`'s one-task global window. The budget
+    * [[graft.Preprocess.withRunningSum]], a call of the engine's one
+    * running-sum primitive (`Preprocess.runningSum`) — range-partition on
+    * the rank key, per-partition sums, broadcast offsets, streaming pass —
+    * never `sum().over(Window.orderBy(…))`'s one-task global window. The budget
     * cut is a narrow filter on the summed column. Exact integer
     * arithmetic end-to-end (rounded quality + BIGINT token counts), so
     * the oracle's window form matches row-for-row. */
@@ -251,10 +252,11 @@ object Sampling {
     * position 0..n−1 in finalized-hash order — the "shuffle the dataset
     * once, identically, on every engine and every rerun" step before
     * sequence packing. Composes [[hashUnit]] (the order key) with
-    * [[graft.Preprocess.withRowIdsDistributed]] (range-partitioned sort +
-    * per-partition offsets), so there is NO single-task global window: the
-    * plan is the same one a 100 TB global sort uses, and the hash order key
-    * is uniform so the range partitions are balanced by construction. */
+    * [[graft.Preprocess.withRowIdsDistributed]] (`Preprocess.runningSum`'s
+    * range-partitioned sort + per-partition offsets), so there is NO
+    * single-task global window: the plan is the same one a 100 TB global
+    * sort uses, and the hash order key is uniform so the range partitions
+    * are balanced by construction. */
   def shuffleOrder(df: DataFrame, keyCol: String, seed: String,
                    outCol: String = "shuffle_pos"): DataFrame =
     graft.Preprocess.withRowIdsDistributed(
@@ -271,8 +273,9 @@ object Sampling {
     * stratum with twice the weight lands twice as often in any key
     * interval; the global order is (key, stratum, row) — fully
     * deterministic, ties exact because both engines compute the same
-    * binary64 division. Both ranks come from the distributed zipWithIndex
-    * primitives ([[graft.Preprocess.withGroupRowIdsDistributed]] +
+    * binary64 division. Both ranks come from the one distributed running
+    * sum, `Preprocess.runningSum` (through
+    * [[graft.Preprocess.withGroupRowIdsDistributed]] +
     * withRowIdsDistributed): NO per-stratum single-task window, no global
     * single-task window — the two range-partitioned sorts are the
     * operator's irreducible cost at any scale. */

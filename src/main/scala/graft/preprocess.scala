@@ -1,8 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import org.apache.spark.storage.StorageLevel
 
 /** Cohort cleaning + feature encoding.
   *
@@ -84,216 +86,119 @@ object Preprocess {
       row_number().over(Window.orderBy(orderCols.map(col(_)): _*)).cast("long") - 1)
 
   /** Scale path for [[withRowIds]]: the same deterministic dense ids with
-    * NO single-task stage. `repartitionByRange` range-partitions on the
-    * order columns (each partition holds a contiguous key range, sorted
-    * within via `sortWithinPartitions`), a driver-collected count per
-    * partition turns into cumulative offsets (one tiny job over partition
-    * counts — the classic zipWithIndex shape), and a `mapPartitions` adds
-    * offset + local position. Output equals [[withRowIds]] row-for-row when
-    * the ordering keys are unique — pinned by PreprocessSpec. */
+    * NO single-task stage — [[runningSum]] of 1 per row, exclusive. Output
+    * equals [[withRowIds]] row-for-row when the ordering keys are unique —
+    * pinned by PreprocessSpec. */
   def withRowIdsDistributed(df: DataFrame, orderCols: Seq[String],
-                            outCol: String = "idx"): DataFrame = {
-    // Persisted (at RDD level) so the count job and the id job see the SAME
-    // partitions: RangePartitioner samples by partition-iteration order, so
-    // re-materializing the lineage after an upstream shuffle could split
-    // differently. RDD caching (unlike Dataset.persist, which the cache
-    // manager pins until an explicit unpersist) is ContextCleaner-managed:
-    // the block is freed once the returned plan is garbage-collected, so
-    // repeated calls don't accumulate cached copies.
-    // Explicit partition count: an advisory repartitionByRange is fair game
-    // for AQE coalescing (small bytes ⇒ one partition ⇒ the single-task
-    // stage this op exists to avoid); an explicit count is binding.
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // RangePartitioner's bound sampling is a FULL pass over the input
-    // (reservoir sample per partition), so an uncached lineage — often a
-    // whole kernel-heavy admission chain — would run twice: once for the
-    // sample, once for the shuffle. Pin the input across those two passes
-    // and free it as soon as the counts action has materialized the
-    // sorted RDD (the narrow projection the caller hands in, not the
-    // corpus).
-    // no-op when the caller already pinned the frame (e.g. the banded
-    // prep's cohort projections): unpersisting here would silently drop
-    // the caller's cache entry (uncache matches by plan).
-    val callerPinned =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val inp = if (callerPinned) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = inp
-      .repartitionByRange(n, orderCols.map(col(_)): _*)
-      .sortWithinPartitions(orderCols.map(col(_)): _*)
-    val rdd = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = rdd.mapPartitionsWithIndex { case (i, it) =>
-      Iterator((i, it.size.toLong))
-    }.collect().sortBy(_._1).map(_._2)
-    if (!callerPinned) inp.unpersist(blocking = false)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val schema = sorted.schema.add(outCol, org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val withIds = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var next = offsets(pid)
-      it.map { r =>
-        val out = org.apache.spark.sql.Row.fromSeq(r.toSeq :+ next)
-        next += 1
-        out
-      }
-    }
-    df.sparkSession.createDataFrame(withIds, schema)
-  }
+                            outCol: String = "idx"): DataFrame =
+    runningSum(df, Nil, orderCols, _ => 1L, outCol, exclusive = true)
 
   /** Distributed PER-GROUP dense row ids — the scale twin of
     * `row_number().over(Window.partitionBy(groupCols…).orderBy(orderCols…))
     * − 1`, which ships EVERY row of a group through one task (a 100 TB
-    * stratum = one sort on one core). Same zipWithIndex shape as
-    * [[withRowIdsDistributed]], generalized: range-partition on
-    * (group ++ order) — a group's rows may span partitions, but each
-    * partition holds a contiguous sorted slice of it — then one tiny job
-    * collects per-(partition, group) counts, cumulative offsets per group
-    * across partitions, and a streaming per-partition pass adds
-    * offset + local position. CONTRACT: the collected state is
-    * O(|partitions| × |distinct groups|) driver rows and the offsets map
-    * ships in every task closure — the operator is for BOUNDED-CARDINALITY
-    * strata (languages, sources, shards; its caller
-    * [[graft.ops.Sampling.interleaveByStrata]] is exactly that), not for
-    * data-sized keys like user ids, where the per-group id should come
-    * from a window over the key's own partition instead. Requires
+    * stratum = one sort on one core): [[runningSum]] of 1 per row,
+    * exclusive, restarting per group. Bounded-cardinality strata only (see
+    * [[runningSum]]'s contract); its caller
+    * [[graft.ops.Sampling.interleaveByStrata]] is exactly that. Requires
     * (group ++ order) to form a total order. Equivalence to the window
     * form is pinned by PreprocessSpec. */
   def withGroupRowIdsDistributed(df: DataFrame, groupCols: Seq[String],
                                  orderCols: Seq[String],
                                  outCol: String = "idx"): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty (use withRowIdsDistributed)")
+    runningSum(df, groupCols, orderCols, _ => 1L, outCol, exclusive = true)
+  }
+
+  /** Distributed INCLUSIVE running SUM of the integral `valueCol` in the
+    * total order of `orderCols` — the scale twin of
+    * `sum(value).over(Window.orderBy(orderCols…).rowsBetween(
+    * unboundedPreceding, currentRow))` without the one-task global window
+    * ([[runningSum]]). A null value fails the job. Used by the token-budget
+    * corpus selection. */
+  def withRunningSum(df: DataFrame, orderCols: Seq[String],
+                     valueCol: String, outCol: String): DataFrame =
+    runningSum(df, Nil, orderCols, longAt(df, valueCol), outCol)
+
+  /** Distributed INCLUSIVE running count of rows with `flagCol` != 0 in the
+    * total order of `orderCols` — the scale twin of `sum(flag).over(
+    * Window.orderBy(orderCols…).rowsBetween(unboundedPreceding,
+    * currentRow))` ([[runningSum]] of 0/1). A null flag fails the job.
+    * Used by the banded neighbor join's global-cohort path; equivalence to
+    * the window form is pinned by PreprocessSpec. */
+  def withRunningFlagCount(df: DataFrame, orderCols: Seq[String],
+                           flagCol: String, outCol: String): DataFrame = {
+    val flag = longAt(df, flagCol)
+    runningSum(df, Nil, orderCols, r => if (flag(r) != 0L) 1L else 0L, outCol)
+  }
+
+  /** A row's integral `c` as a long; a null throws (never counts as 0). */
+  private def longAt(df: DataFrame, c: String): Row => Long = {
+    val i = df.schema.fieldIndex(c)
+    r => r.getAs[Number](i).longValue()
+  }
+
+  /** The one distributed running sum behind the four ops above: `outCol` =
+    * Σ `inc` over the rows up to this one in the total order of
+    * (groupCols ++ orderCols), restarting per group (`Nil` groups = one
+    * group); `exclusive` leaves the row's own `inc` out (0-based ids).
+    * The zipWithIndex shape, with NO single-task stage: `repartitionByRange`
+    * on (group ++ order) — a group may span partitions, but each partition
+    * holds a contiguous sorted slice of it — then one tiny job collects
+    * per-(partition, group) sums, the driver turns them into per-group
+    * cumulative offsets across partitions, and a streaming per-partition
+    * pass adds offset + local running sum. CONTRACT: the collected state
+    * is O(|partitions| × |distinct groups|) driver rows and ships in every
+    * task closure — for BOUNDED-CARDINALITY strata (languages, sources,
+    * shards), not for data-sized keys like user ids. */
+  private[graft] def runningSum(df: DataFrame, groupCols: Seq[String],
+                                orderCols: Seq[String], inc: Row => Long,
+                                outCol: String,
+                                exclusive: Boolean = false): DataFrame = {
+    // Explicit partition count: an advisory repartitionByRange is fair game
+    // for AQE coalescing (small bytes ⇒ one partition ⇒ the single-task
+    // stage this op exists to avoid); an explicit count is binding.
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val keyCols = groupCols ++ orderCols
-    // pinned across the range-sample + shuffle double pass (see
-    // withRowIdsDistributed), freed right after the counts action
-    // no-op when the caller already pinned the frame (e.g. the banded
-    // prep's cohort projections): unpersisting here would silently drop
-    // the caller's cache entry (uncache matches by plan).
-    val callerPinned =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val inp = if (callerPinned) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = inp
-      .repartitionByRange(n, keyCols.map(col(_)): _*)
-      .sortWithinPartitions(keyCols.map(col(_)): _*)
-    val rdd = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keyCols = (groupCols ++ orderCols).map(col(_))
+    // RangePartitioner's bound sampling is a FULL pass over the input, so
+    // an uncached lineage would run twice (sample, then shuffle): pin the
+    // input across both and free it once the sums job has materialized the
+    // sorted RDD. A caller's own pin is left alone: unpersisting it here
+    // would silently drop the caller's cache entry (uncache matches by plan).
+    val callerPinned = df.storageLevel != StorageLevel.NONE
+    val inp = if (callerPinned) df else df.persist(StorageLevel.MEMORY_AND_DISK)
+    val sorted = inp.repartitionByRange(n, keyCols: _*).sortWithinPartitions(keyCols: _*)
+    // Persisted (at RDD level) so the sums job and the output pass see the
+    // SAME partitions. RDD caching (unlike Dataset.persist, which the cache
+    // manager pins until an explicit unpersist) is ContextCleaner-managed:
+    // the block is freed once the returned plan is garbage-collected.
+    val rdd = sorted.rdd.persist(StorageLevel.MEMORY_AND_DISK)
     val gIdx = groupCols.map(sorted.schema.fieldIndex)
-    val counts = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      // LinkedHashMap: a partition sees each group as one contiguous run,
-      // so this is O(groups-in-partition) entries however large the slice
+    val sums = try rdd.mapPartitionsWithIndex { case (pid, it) =>
+      // a partition sees each group as one contiguous run, so this is
+      // O(groups-in-partition) entries however large the slice
       val m = scala.collection.mutable.LinkedHashMap.empty[Seq[Any], Long]
       it.foreach { r =>
-        val k = gIdx.map(r.get)
-        m.update(k, m.getOrElse(k, 0L) + 1L)
+        val g = gIdx.map(r.get)
+        m.update(g, m.getOrElse(g, 0L) + inc(r))
       }
-      m.iterator.map { case (k, c) => (pid, k, c) }
-    }.collect()
-    if (!callerPinned) inp.unpersist(blocking = false)
-    val offsets: Map[(Int, Seq[Any]), Long] = counts.groupBy(_._2)
-      .flatMap { case (g, cs) =>
-        val inOrder = cs.sortBy(_._1)
+      m.iterator.map { case (g, s) => (pid, g, s) }
+    }.collect() finally if (!callerPinned) inp.unpersist(blocking = false)
+    val offsets: Map[(Int, Seq[Any]), Long] = sums.groupBy(_._2)
+      .flatMap { case (g, ps) =>
+        val inOrder = ps.sortBy(_._1)
         inOrder.map(_._1).zip(inOrder.map(_._3).scanLeft(0L)(_ + _))
           .map { case (pid, off) => (pid, g) -> off }
       }
-    val schema = sorted.schema.add(outCol, org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val withIds = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      val next = scala.collection.mutable.HashMap.empty[Seq[Any], Long]
+    val schema = sorted.schema.add(outCol, LongType, nullable = false)
+    val out = rdd.mapPartitionsWithIndex { case (pid, it) =>
+      var g: Seq[Any] = null
+      var acc = 0L
       it.map { r =>
         val k = gIdx.map(r.get)
-        val v = next.getOrElse(k, offsets.getOrElse((pid, k), 0L))
-        next.update(k, v + 1)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ v)
-      }
-    }
-    df.sparkSession.createDataFrame(withIds, schema)
-  }
-
-  /** Distributed INCLUSIVE running SUM of `valueCol` (integral) in the
-    * total order of `orderCols` — [[withRunningFlagCount]] generalized from
-    * a 0/1 flag to an arbitrary long-valued column: the scale twin of
-    * `sum(value).over(Window.orderBy(orderCols…).rowsBetween(
-    * unboundedPreceding, currentRow))` without the one-task global window.
-    * Same two-job shape (range-partition + sort, per-partition sums →
-    * cumulative offsets, streaming pass); order keys must form a total
-    * order. Used by the token-budget corpus selection. */
-  def withRunningSum(df: DataFrame, orderCols: Seq[String],
-                     valueCol: String, outCol: String): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // pinned across the range-sample + shuffle double pass (see
-    // withRowIdsDistributed), freed right after the sums action
-    // no-op when the caller already pinned the frame (e.g. the banded
-    // prep's cohort projections): unpersisting here would silently drop
-    // the caller's cache entry (uncache matches by plan).
-    val callerPinned =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val inp = if (callerPinned) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = inp
-      .repartitionByRange(n, orderCols.map(col(_)): _*)
-      .sortWithinPartitions(orderCols.map(col(_)): _*)
-    val rdd = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val vIdx = sorted.schema.fieldIndex(valueCol)
-    def v(r: org.apache.spark.sql.Row): Long = r.getAs[Number](vIdx).longValue()
-    val sums = rdd.mapPartitionsWithIndex { case (i, it) =>
-      Iterator((i, it.foldLeft(0L)(_ + v(_))))
-    }.collect().sortBy(_._1).map(_._2)
-    if (!callerPinned) inp.unpersist(blocking = false)
-    val offsets = sums.scanLeft(0L)(_ + _)
-    val schema = sorted.schema.add(outCol, org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val out = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var acc = offsets(pid)
-      it.map { r =>
-        acc += v(r)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
-      }
-    }
-    df.sparkSession.createDataFrame(out, schema)
-  }
-
-  /** Distributed INCLUSIVE running count of rows with `flagCol` != 0 in the
-    * total order of `orderCols` — the zipWithIndex-shaped scale twin of
-    * `sum(flag).over(Window.orderBy(orderCols…).rowsBetween(
-    * unboundedPreceding, currentRow))`, which funnels every row through ONE
-    * task when there is no partition key. Same two-job shape as
-    * [[withRowIdsDistributed]]: range-partition + sort, one tiny job for
-    * per-partition flag counts → cumulative offsets, then a streaming
-    * per-partition pass. Requires the order keys to form a total order
-    * (ties would make both forms nondeterministic). Used by the banded
-    * neighbor join's global-cohort path; equivalence to the window form is
-    * pinned by PreprocessSpec. */
-  def withRunningFlagCount(df: DataFrame, orderCols: Seq[String],
-                           flagCol: String, outCol: String): DataFrame = {
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // pinned across the range-sample + shuffle double pass (see
-    // withRowIdsDistributed), freed right after the counts action
-    // no-op when the caller already pinned the frame (e.g. the banded
-    // prep's cohort projections): unpersisting here would silently drop
-    // the caller's cache entry (uncache matches by plan).
-    val callerPinned =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    val inp = if (callerPinned) df
-      else df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sorted = inp
-      .repartitionByRange(n, orderCols.map(col(_)): _*)
-      .sortWithinPartitions(orderCols.map(col(_)): _*)
-    val rdd = sorted.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val flagIdx = sorted.schema.fieldIndex(flagCol)
-    def flagged(r: org.apache.spark.sql.Row): Boolean =
-      r.getAs[Number](flagIdx).longValue() != 0L
-    val counts = rdd.mapPartitionsWithIndex { case (i, it) =>
-      Iterator((i, it.count(flagged).toLong))
-    }.collect().sortBy(_._1).map(_._2)
-    if (!callerPinned) inp.unpersist(blocking = false)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val schema = sorted.schema.add(outCol, org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val out = rdd.mapPartitionsWithIndex { case (pid, it) =>
-      var acc = offsets(pid)
-      it.map { r =>
-        if (flagged(r)) acc += 1
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
+        if (k != g) { g = k; acc = offsets.getOrElse((pid, k), 0L) }
+        val d = inc(r)
+        acc += d
+        Row.fromSeq(r.toSeq :+ (if (exclusive) acc - d else acc))
       }
     }
     df.sparkSession.createDataFrame(out, schema)

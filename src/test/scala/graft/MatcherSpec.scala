@@ -53,6 +53,24 @@ class MatcherSpec extends SparkSpec {
     assert(adjusted == Map("d1" -> 20.0, "d2" -> 8.0))
   }
 
+  test("matcher percentile radius is one cohort's, never pooled across dates") {
+    val byDay = sp.copy(numCols = Seq("x"), cohortCols = Seq("day"))
+    def cohort(rows: (String, Double, String, Double)*) =
+      rows.toDF("gclid", "conversion_value", "day", "x")
+        .withColumn("features", Preprocess.tokenFeatures(Seq("day")))
+    // nearest neighbours sit 1 apart on d1 and 100 apart on d2
+    val matcher = new NearestCustomerMatcher(
+      cohort(("1", 10.0, "d1", 0.0), ("2", 10.0, "d2", 0.0)), byDay)
+    val noconsent = cohort(("10", 5.0, "d1", 1.0), ("11", 5.0, "d1", 1.0),
+      ("12", 5.0, "d2", 100.0), ("13", 5.0, "d2", 100.0))
+    val e = intercept[IllegalArgumentException](
+      matcher.minRadiusByPercentile(noconsent, 0.5))
+    assert(e.getMessage.contains("Summary.minRadiusByPercentilePerCohort"), e)
+    // one date at a time: the radius the pipeline uses for that date
+    assert(matcher.minRadiusByPercentile(noconsent.filter(col("day") === "d1"), 0.5) == 1.0)
+    assert(matcher.minRadiusByPercentile(noconsent.filter(col("day") === "d2"), 0.5) == 100.0)
+  }
+
   test("CLIs take at most one strategy, metric and path, and every leading arg") {
     for (extra <- Seq(Seq("k=3", "radius=1.0"), Seq("percentile=0.5", "k=2"),
         Seq("metric=l1", "metric=l2"), Seq("k=1", "dates.txt", "more.txt"))) {

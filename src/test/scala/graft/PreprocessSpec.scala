@@ -132,4 +132,37 @@ class PreprocessSpec extends SparkSpec {
     assert(dist.select("g", "key", "payload", "idx")
       .collect().map(_.toSeq).toSet == windowed)
   }
+
+  test("distributed ops release their own input pin and keep a caller's") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.storage.StorageLevel
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "withRowIdsDistributed" -> (Preprocess.withRowIdsDistributed(_, Seq("key"), "out")),
+      "withGroupRowIdsDistributed" ->
+        (Preprocess.withGroupRowIdsDistributed(_, Seq("g"), Seq("key"), "out")),
+      "withRunningSum" -> (Preprocess.withRunningSum(_, Seq("key"), "v", "out")),
+      "withRunningFlagCount" -> (Preprocess.withRunningFlagCount(_, Seq("key"), "v", "out")))
+    for ((name, op) <- ops) {
+      val df = spark.range(0, 200).select(
+        (col("id") % 2).cast("string").as("g"),
+        (col("id") * 7919 % 200).as("key"),
+        (col("id") % 3).as("v"))
+      assert(op(df).count() == 200)
+      assert(df.storageLevel == StorageLevel.NONE, s"$name left its input pinned")
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      try {
+        assert(op(df).count() == 200)
+        assert(df.storageLevel == StorageLevel.MEMORY_AND_DISK,
+          s"$name dropped the caller's pin")
+      } finally df.unpersist()
+    }
+    // a null value or flag fails the sums job (never counts as 0), and the
+    // op's own pin still goes
+    val nulls = spark.range(0, 200).select(col("id").as("key"),
+      when(col("id") =!= 7, col("id") % 2).as("v"))
+    for ((name, op) <- ops.drop(2)) {
+      intercept[org.apache.spark.SparkException](op(nulls))
+      assert(nulls.storageLevel == StorageLevel.NONE, s"$name kept its pin after a failure")
+    }
+  }
 }

@@ -73,6 +73,18 @@ class RegistrySpec extends SparkSpec {
       s"files in src/main declaring a main: $mains")
   }
 
+  test("one range-partitioned running sum in src/main") {
+    // The zipWithIndex shape (range-partition, per-partition sums, offsets,
+    // streaming pass) and its input-pin rule have one owner,
+    // Preprocess.runningSum; a second copy forks both again.
+    val uses = allSources.collect {
+      case (p, s) if p.startsWith(Paths.get("src", "main")) =>
+        p.getFileName.toString -> "repartitionByRange\\(".r.findAllMatchIn(s).size
+    }.filter(_._2 > 0)
+    assert(uses == Seq("preprocess.scala" -> 1),
+      s"repartitionByRange( calls in src/main: $uses")
+  }
+
   test("SparkEntry.entry returns one adjusted row per consent row") {
     // The driver's smoke hook: it checks only rows > 0, so pin the count.
     val consent = Cohorts.cohorts(spark, "/root/testdata/sf0.001")._1.count()
