@@ -13,9 +13,9 @@ import org.apache.spark.sql.functions._
   *   3. run the adjustment under one strategy with per-date cohort scope,
   *   4. write per-date CSVs: adjustments data + summary (pipeline.py:265-295).
   *
-  * All dates are processed in ONE Spark job graph, scoped by the date
-  * column — not the reference's one-date-per-worker loop. Arguments: see
-  * `Usage` and [[Trailing]].
+  * All dates are processed together by one set of Spark actions, scoped by
+  * the date column — not the reference's one-date-per-worker loop.
+  * Arguments: see `Usage` and [[Trailing]].
   */
 object RunPipeline {
   def main(args: Array[String]): Unit = {
@@ -133,34 +133,41 @@ object RunPipeline {
     val rowIdCol = "__row_id"
     val addId = (df: org.apache.spark.sql.DataFrame) =>
       df.withColumn(rowIdCol, to_json(struct(cfg.idCols.map(col(_)): _*)))
-    val (nc, c) = (addId(nc0), addId(c0))
 
     val spec = CohortSpec(
       idCol = rowIdCol, valueCol = cfg.conversionCol,
       numCols = numCols, cohortCols = Seq(cfg.dateCol), metric = cfg.metric)
-    val result = new NearestCustomerMatcher(c, spec)
-      .adjustmentsAndSummary(nc, strategy)
+    // Every relation this run materializes — the prepared cohorts here,
+    // what CocoaPipeline.run adds — is freed when the run ends, written or
+    // failed.
+    val pins = new Pins
+    try {
+      // Prepare once: the checks, both kNN passes, both writes and the
+      // summary read these two checkpoints, never the parquet files.
+      val (nc, c) = (pins(addId(nc0)), pins(addId(c0)))
+      val result = new NearestCustomerMatcher(c, spec)
+        .adjustmentsAndSummary(nc, strategy)
+      pins.adopt(result.pins)
 
-    // Reference artifact layout: <out>/<date>/adjustments_data.csv +
-    // adjustments_summary.csv (pipeline.py:265-295) — exact names, one
-    // plain CSV per date.
-    Io.writeCsvExact(result.adjusted.drop(spec.tokenCol, rowIdCol),
-      cfg.dateCol, outDir, "adjustments_data.csv")
-    // The summary aggregation feeds both the CSV write and the zero-match
-    // warning below; cache it so the (noconsent scan + matched agg) DAG runs
-    // once, not once per consumer.
-    val summary = result.summary.persist()
-    Io.writeCsvExact(summary, cfg.dateCol, outDir, "adjustments_summary.csv")
-    // reference parity: warn when a cohort matched nothing (radius too
-    // tight — nearest_consented_customers.py:176-182 logs the same).
-    summary
-      .select(col(cfg.dateCol), col("number_matched_conversions"))
-      .collect()
-      .filter(_.getLong(1) == 0L)
-      .foreach(r => System.err.println(
-        s"[pipeline] WARNING: no matching customers for ${r.get(0)} — " +
-          "no conversion values redistributed (radius too small?)"))
-    summary.unpersist()
+      // Reference artifact layout: <out>/<date>/adjustments_data.csv +
+      // adjustments_summary.csv (pipeline.py:265-295) — exact names, one
+      // plain CSV per date.
+      Io.writeCsvExact(result.adjusted.drop(spec.tokenCol, rowIdCol),
+        cfg.dateCol, outDir, "adjustments_data.csv")
+      // One row per date: collected once, it feeds both the CSV write and
+      // the zero-match warning below.
+      val summaryRows = result.summary.collect()
+      Io.writeCsvExact(spark.createDataFrame(
+          java.util.Arrays.asList(summaryRows: _*), result.summary.schema),
+        cfg.dateCol, outDir, "adjustments_summary.csv")
+      // reference parity: warn when a cohort matched nothing (radius too
+      // tight — nearest_consented_customers.py:176-182 logs the same).
+      summaryRows
+        .filter(_.getAs[Long]("number_matched_conversions") == 0L)
+        .foreach(r => System.err.println(
+          s"[pipeline] WARNING: no matching customers for ${r.getAs[Any](cfg.dateCol)} — " +
+            "no conversion values redistributed (radius too small?)"))
+    } finally pins.release()
     println(s"[pipeline] wrote ${dates.size} date(s) to $outDir")
   }
 }

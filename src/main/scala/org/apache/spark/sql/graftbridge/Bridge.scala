@@ -33,7 +33,12 @@ object Bridge extends org.apache.spark.internal.Logging {
     * internal-row RDD directly and hands it back: `rdd.unpersist()` frees
     * the blocks deterministically, and any still-referenced tail is
     * ContextCleaner-managed (freed on GC) rather than pinned.
-    * Rows are copied because `toRdd` reuses mutable UnsafeRows. */
+    * Rows are copied because `toRdd` reuses mutable UnsafeRows.
+    *
+    * Its job is an RDD action, not a Dataset action: no
+    * `QueryExecutionListener` sees the plan it executed, so a plan probe
+    * (a test's largest-join check, a benchmark's join probe) misses every
+    * operator that runs here. Use [[checkpointed]] where that matters. */
   def materialized(df: DataFrame,
                    level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
       : (DataFrame, RDD[InternalRow]) = {
@@ -43,6 +48,29 @@ object Bridge extends org.apache.spark.internal.Logging {
     rdd.count() // materialize now: downstream reads hit blocks, not lineage
     (ds.sparkSession.internalCreateDataFrame(rdd, ds.schema), rdd)
   }
+
+  /** Eagerly materialize `df` through `Dataset.localCheckpoint` and hand
+    * back the checkpointed RDD, so its owner frees the blocks with
+    * [[release]] once the last reader has run (the cache manager never
+    * sees this RDD, so `Catalog.clearCache` cannot; an unreferenced one is
+    * ContextCleaner-managed). Unlike [[materialized]] the job runs as
+    * a Dataset SQL action, so `QueryExecutionListener`s see its executed
+    * plan, and the result keeps the plan's output partitioning and size
+    * estimate. Readers plan from the checkpoint leaf instead of re-planning
+    * the lineage behind it. */
+  def checkpointed(df: DataFrame): (DataFrame, RDD[InternalRow]) = {
+    val out = df.localCheckpoint(eager = true)
+    val rdd = out.queryExecution.logical.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+    }.getOrElse(throw new IllegalStateException("localCheckpoint returned no LogicalRDD"))
+    (out, rdd)
+  }
+
+  /** Frees a [[checkpointed]] RDD's blocks. `RDD.unpersist` would also do
+    * that, but it warns on every call that a local checkpoint cannot be
+    * recomputed once freed, which is the point here: the owner frees it
+    * after its last reader. */
+  def release(rdd: RDD[_]): Unit = rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** The MEASURED storage footprint of a persisted-and-materialized RDD
     * (memory + disk bytes across its blocks), 0 when unknown. */

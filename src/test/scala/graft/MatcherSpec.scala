@@ -367,4 +367,74 @@ class MatcherSpec extends SparkSpec {
         s"restart re-processed $a")
     }
   }
+
+  /** Two dates of consent and noconsent parquet with numeric features
+    * `numCols` and one categorical; returns the two cohort paths. */
+  private def twoDateCohorts(dir: String, numCols: Seq[String]): (String, String) = {
+    def cohort(prefix: String, n: Int) = (0 until 2 * n).map { i =>
+      val d = if (i % 2 == 0) "2021-11-20" else "2021-11-21"
+      (s"$prefix$i", s"$d 12:00:${"%02d".format(i)} UTC", 5.0 + i % 7, d,
+        Seq("dress", "shoe", "hat")(i % 3), (i * 37 % 11).toDouble, (i * 13 % 5).toDouble)
+    }.toDF("gclid", "conversion_timestamp", "conversion_value", "conversion_date",
+        "conversion_item", "a", "b")
+      .withColumn("conversion_date", to_date(col("conversion_date")))
+      .drop(Seq("a", "b").filterNot(numCols.contains): _*)
+    cohort("C-", 12).write.parquet(s"$dir/consent")
+    cohort("N-", 6).write.parquet(s"$dir/noconsent")
+    (s"$dir/consent", s"$dir/noconsent")
+  }
+
+  test("runForDates reads the cohort parquet only to prepare the cohorts") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val dir = Files.createTempDirectory("graft-scan-once").toString
+    val (consentPath, noconsentPath) = twoDateCohorts(dir, Seq("a"))
+    // root paths of every file scan in a plan, cached relations included
+    object Scans extends AdaptiveSparkPlanHelper {
+      def roots(plan: SparkPlan): Seq[String] = collectWithSubqueries(plan) {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toString)
+        case m: InMemoryTableScanExec => roots(m.relation.cachedPlan)
+      }.flatten
+    }
+    // K: one kNN pass; Percentile: the k=1 pass, then the radius pass
+    for (strategy <- Seq(MatchStrategy.K(2), MatchStrategy.Percentile(0.5))) {
+      val (_, plans) = org.apache.spark.ActionPlans.during(spark) {
+        RunPipeline.runForDates(spark, consentPath, noconsentPath, s"$dir/out-$strategy",
+          strategy, Seq("2021-11-20", "2021-11-21"))
+      }
+      val readers = plans.collect { case (name, plan)
+        if Scans.roots(plan).exists(r => r.endsWith("/consent") || r.endsWith("/noconsent")) =>
+        name
+      }
+      // the checks, the kNN passes, both writes and the summary collect
+      // start from the two prepared-cohort checkpoints
+      assert(readers == Seq("localCheckpoint", "localCheckpoint"),
+        s"$strategy: actions reading the cohort parquet: $readers of ${plans.map(_._1)}")
+      assert(plans.size >= 6, s"$strategy: ${plans.map(_._1)}")
+    }
+  }
+
+  test("runForDates frees every relation it pins, written or failed") {
+    val dir = Files.createTempDirectory("graft-pins").toString
+    // two numeric features: the K route joins the dense pairs relation
+    val (consentPath, noconsentPath) = twoDateCohorts(dir, Seq("a", "b"))
+    val sc = spark.sparkContext
+    def pinsLeft(outDir: String): collection.Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      RunPipeline.runForDates(spark, consentPath, noconsentPath, outDir,
+        MatchStrategy.K(2), Seq("2021-11-20", "2021-11-21"))
+      sc.getPersistentRDDs.keySet -- before
+    }
+    assert(pinsLeft(s"$dir/out").isEmpty)
+    assert(new java.io.File(s"$dir/out/2021-11-21/adjustments_summary.csv").isFile)
+    // an output dir that is a regular file: the first write throws after
+    // the cohorts and the selected pairs were materialized
+    val blocked = new java.io.File(s"$dir/blocked")
+    assert(blocked.createNewFile())
+    val before = sc.getPersistentRDDs.keySet
+    val e = intercept[Exception](pinsLeft(blocked.getPath))
+    assert(e.getStackTrace.exists(_.getMethodName == "writeCsvExact"), e)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.ActionPlans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -467,8 +468,10 @@ class PropertySpec extends SparkSpec {
   }
 
   test("pipeline kNN routes: one numeric feature never joins all |NC|x|C| pairs") {
-    // rows out of the largest join the executed plans ran, looking through
-    // cached relations (the pipeline persists its selected pairs)
+    // rows out of the largest join that any Dataset action of the run
+    // executed, read from each action's plan by a listener (the pipeline
+    // checkpoints its selected pairs, so the kNN join runs in that action,
+    // not in the final plans), looking through cached relations
     object Joins extends AdaptiveSparkPlanHelper {
       def largest(plan: SparkPlan): Long = (0L +: collectWithSubqueries(plan) {
         case j: BaseJoinExec => j.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
@@ -482,11 +485,13 @@ class PropertySpec extends SparkSpec {
     val nc = encode((1000 until 1000 + nNc).map(row).toList).withColumn("b", col("a") * 0.5)
     def largestJoin(sp: CohortSpec, strategy: MatchStrategy): Long = {
       spark.catalog.clearCache()
-      val res = CocoaPipeline.run(c, nc, sp, strategy)
-      Seq(res.adjusted, res.summary).map { df =>
-        df.collect()
-        Joins.largest(df.queryExecution.executedPlan)
-      }.max
+      val (_, plans) = ActionPlans.during(spark) {
+        val res = CocoaPipeline.run(c, nc, sp, strategy)
+        res.adjusted.collect()
+        res.summary.collect()
+        res.release()
+      }
+      plans.map { case (_, plan) => Joins.largest(plan) }.max
     }
     for (strategy <- Seq(MatchStrategy.K(3), MatchStrategy.Percentile(0.5))) {
       val rows = largestJoin(spec, strategy)
